@@ -120,9 +120,3 @@ def link_mentions(
         )
     )
 
-
-def unlinked_mentions(mentions: DataFrame, dictionary: DataFrame) -> DataFrame:
-    """Recall accounting: mentions with no dictionary entry (left anti)."""
-    return mentions.join(
-        F.broadcast(dictionary.select("surface").distinct()), "surface", "left_anti"
-    )

@@ -68,20 +68,25 @@ def run_pipeline(
         cfg.hot_threshold,
         cfg.target_rows,
     )
-    mentions = extract.extract_mentions(salted, dictionary)
-    linked = metrics.with_lineage_part(
-        link.link_mentions(mentions, dictionary)
-    ).persist()  # materialized by the snapshot write; reused by every branch below
+    # the broadcast head and the sort-merge tail of link_mentions both read
+    # mentions: without this cut the Python matcher runs once per join side
+    mentions = extract.extract_mentions(salted, dictionary).persist()
+    linked = metrics.with_lineage_part(link.link_mentions(mentions, dictionary))
     resuming = done is not None and done.limit(1).count() > 0
     if resuming:
+        # merge reads linked once and the caller gets the merged table, so
+        # a cache of linked would be reused by nothing
         wh.merge(spark, "linked", linked, keys=["conv_id", "turn_idx", "m_idx"])
         linked_all = wh.read(spark, "linked").persist()
     else:
+        # materialized by the snapshot write; reused by every branch below
+        linked = linked.persist()
         # unpartitioned write: partitioning `linked` by lineage_part would
         # cost an extra full shuffle of the biggest table in the pipeline;
         # resume granularity only needs the checkpoint ROWS, not the layout
         wh.write_snapshot("linked", linked)
         linked_all = linked  # fresh run: the cache IS the table contents
+    mentions.unpersist()
     # one cheap aggregation over the cache, landed driver-side (no write job)
     metrics.record_stage_cached(wh, linked_all, "linked", cfg.run_id)
     cfg.observed["linked_rows"] = wh.rows("linked")

@@ -9,6 +9,11 @@ the local[32] sandbox:
 - UTC session timezone so timestamp semantics match the DuckDB oracle.
 - shuffle.partitions sized to cores locally; on a real cluster this is
   overridden by AQE coalescing + `spark.sql.adaptive.coalescePartitions`.
+- A codegen cache that holds a whole pipeline call
+  (`spark.sql.codegen.cache.maxEntries`, see CODEGEN_CACHE_ENTRIES). It is a
+  static SQL conf: it applies only to sessions this factory creates. A
+  session created elsewhere and passed in, as `__spark_entry__.entry`
+  receives one, keeps Spark's default of 100 entries.
 """
 
 from __future__ import annotations
@@ -18,6 +23,12 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+# One run_pipeline call generates about 133 distinct classes. Spark's default
+# LRU codegen cache holds 100, smaller than the loop, so it thrashes: every
+# warm call re-ran Janino on 99-116 classes and the JIT re-warmed each fresh
+# class. Sized for a whole call with headroom for the registry ops.
+CODEGEN_CACHE_ENTRIES = 1000
 
 
 def _mem_total_gib() -> int:
@@ -85,6 +96,7 @@ def get_spark(
         # contract names the algorithm).
         "spark.sql.autoBroadcastJoinThreshold": str(32 * 1024 * 1024),
         "spark.ui.enabled": "false",
+        "spark.sql.codegen.cache.maxEntries": str(CODEGEN_CACHE_ENTRIES),
         # local[N] runs every task in the driver JVM: N concurrent tasks'
         # shuffle/agg buffers share this heap, and an undersized heap shows
         # up as GC stalls that flatten core-count scaling (measured: 8g gave

@@ -9,10 +9,10 @@ across partitions by a turn-derived salt without changing any result
 (SURVEY.md §4.3). Ops that need whole conversations (cross-turn windows) run
 AFTER extraction on mention-level data, which is orders of magnitude smaller.
 
-One cheap count pass computes per-conversation sizes; conversations above
-``hot_threshold`` get ``salt = turn_idx % n_splits`` (n_splits sized so each
-slice ≈ target_rows); everything else gets salt 0. The count side is tiny
-(one row per conversation) and is broadcast.
+The salt is ``turn_idx // target_rows``: a conversation longer than
+``target_rows`` splits into slices of consecutive turns of about that size,
+and every shorter conversation keeps salt 0 on one partition. No count pass
+is needed, because turn_idx already says how long a conversation has run.
 """
 
 from __future__ import annotations

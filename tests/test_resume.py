@@ -27,19 +27,36 @@ def _spo(out) -> set:
     return {(r["subj"], r["pred"], r["obj"]) for r in out["triples"].collect()}
 
 
+def _release(out) -> None:
+    """Unpersist the cached tables run_pipeline hands its caller."""
+    out["linked"].unpersist()
+    out["canonical_map"].unpersist()
+
+
+def _persistent_rdds(spark) -> set:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def _cache_rdd(df) -> int:
+    """Id of the RDD holding a persisted DataFrame's cache."""
+    relation = df._jdf.queryExecution().withCachedData()
+    return relation.cacheBuilder().cachedColumnBuffers().id()
+
+
 def test_resume_converges_to_clean_run(spark, spark_corpus, tmp_path):
     tr, d, e = spark_corpus
 
     clean_cfg = PipelineConfig(warehouse_root=str(tmp_path / "clean"), run_id="r1",
                                num_partitions=8, hot_threshold=200, target_rows=100)
-    clean = _spo(run_pipeline(spark, tr, d, e, clean_cfg))
+    clean_out = run_pipeline(spark, tr, d, e, clean_cfg)
+    clean = _spo(clean_out)
 
     # "crashed" first attempt: only even lineage parts were processed
     part = metrics.with_lineage_part(tr)
     half = part.where(F.col("lineage_part") % 2 == 0).drop("lineage_part")
     resume_cfg = PipelineConfig(warehouse_root=str(tmp_path / "resume"), run_id="r1",
                                 num_partitions=8, hot_threshold=200, target_rows=100)
-    run_pipeline(spark, half, d, e, resume_cfg)
+    half_out = run_pipeline(spark, half, d, e, resume_cfg)
 
     wh = Warehouse(str(tmp_path / "resume"))
     done_before = {
@@ -48,9 +65,17 @@ def test_resume_converges_to_clean_run(spark, spark_corpus, tmp_path):
     }
     assert done_before  # checkpoint rows exist
 
-    # restart with the FULL input and the same run_id
+    # restart with the FULL input and the same run_id; the resumed call
+    # leaves cached only the tables it returns (canonical_map may share a
+    # cache an earlier identical plan made, so compare ids, not counts)
+    for prev in (clean_out, half_out):
+        _release(prev)
+    cached_before = _persistent_rdds(spark)
     out = run_pipeline(spark, tr, d, e, resume_cfg)
     assert _spo(out) == clean
+    returned = {_cache_rdd(out["linked"]), _cache_rdd(out["canonical_map"])}
+    assert _persistent_rdds(spark) - cached_before <= returned
+    _release(out)
 
     done_after = {
         r["lineage_part"]
