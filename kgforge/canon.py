@@ -13,15 +13,19 @@ path of length d converges in O(log d) iterations instead of O(d). Each
 iteration `localCheckpoint`s to truncate lineage (Catalyst has no recursion;
 an unchecked loop rebuilds an exponentially deep plan, SURVEY.md §4.3).
 
-Convergence check: count of labels that changed this iteration — a cheap
-aggregate over the (node → label) table, not a join against the previous
-full result.
+Convergence check: does any label differ from the previous iteration's —
+a limit(1) probe, not a full diff. Both fixpoints raise NotConverged at
+their round cap rather than return a map that may still be wrong.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+
+class NotConverged(RuntimeError):
+    """A fixpoint loop reached its round cap while still changing."""
 
 
 def connected_components(
@@ -62,23 +66,24 @@ def connected_components(
             new.join(lmap, new.label == lmap.l_node, "left")
             .select("node", F.coalesce("l_label", "label").alias("label"))
         )
-        new = new.localCheckpoint(eager=True)
+        old, labels = labels, new.localCheckpoint(eager=True)
         # convergence check every 2nd round: pointer jumping converges in
         # O(log d) rounds, so a stale check costs at most one extra cheap
         # iteration while halving the count-job overhead of the loop
         if it % 2 == 1 or it == max_iter - 1:
             changed = (
-                new.alias("n")
-                .join(labels.alias("o"), "node")
+                labels.alias("n")
+                .join(old.alias("o"), "node")
                 .where(F.col("n.label") != F.col("o.label"))
                 .limit(1)
                 .count()
             )
-            labels = new
             if changed == 0:
                 break
-        else:
-            labels = new
+    else:
+        raise NotConverged(
+            f"connected_components: labels still changing after {max_iter} iterations"
+        )
     return labels.select("node", F.col("label").alias("component"))
 
 
@@ -186,7 +191,9 @@ def connected_components_star(
     Each round is 2 groupBy-join passes over the current edge set, which
     CONTRACTS geometrically — unlike plain label propagation the working set
     shrinks as stars collapse, so later rounds are nearly free. Converges
-    when the edge set is a fixed star forest; roots map to themselves.
+    when a round leaves the edge set unchanged (a fixed star forest); roots
+    map to themselves. Raises NotConverged if round ``max_rounds`` still
+    changed it.
     Produces the identical (node → min-of-component) map as
     connected_components (equality-tested in tests/test_canon.py).
     """
@@ -234,17 +241,24 @@ def connected_components_star(
         )
 
     cur = e
-    prev_sig = None
     for _ in range(max_rounds):
-        cur = small_star(large_star(cur)).localCheckpoint(eager=True)
-        sig = cur.select(
-            F.count(F.lit(1)).alias("n"),
-            F.expr("bit_xor(xxhash64(u, v))").alias("h"),
-        ).first()
-        sig = (sig["n"], sig["h"])
-        if sig == prev_sig:
+        prev, cur = cur, small_star(large_star(cur)).localCheckpoint(eager=True)
+        # both are distinct edge sets, so an edge seen once in their union
+        # is in exactly one of them: none means the round changed nothing
+        changed = (
+            cur.unionByName(prev)
+            .groupBy("u", "v")
+            .count()
+            .where(F.col("count") == 1)
+            .limit(1)
+            .count()
+        )
+        if changed == 0:
             break
-        prev_sig = sig
+    else:
+        raise NotConverged(
+            f"connected_components_star: edges still changing after {max_rounds} rounds"
+        )
 
     roots = cur.select(F.col("u").alias("node"), F.col("v").alias("component"))
     return all_nodes.join(roots, "node", "left").select(

@@ -91,10 +91,10 @@ def _referenced(fn: types.FunctionType):
                 break
 
 
-def source_fingerprint(fn: types.FunctionType, sql: str | None) -> str:
-    """sha256 over fn + oracle SQL + transitive kgforge callees/constants."""
+def _walk(fn: types.FunctionType) -> tuple[set[str], list[str]]:
+    """(idents of fn and every kgforge function it reaches, hashed parts)."""
     seen: set[str] = set()
-    parts: list[str] = [f"sql::{sql or ''}"]
+    parts: list[str] = []
 
     def visit(f: types.FunctionType) -> None:
         ident = f"{f.__module__}.{f.__qualname__}"
@@ -118,6 +118,12 @@ def source_fingerprint(fn: types.FunctionType, sql: str | None) -> str:
                     parts.append(f"const::{name}::{val!r}")
 
     visit(fn)
+    return seen, parts
+
+
+def source_fingerprint(fn: types.FunctionType, sql: str | None) -> str:
+    """sha256 over fn + oracle SQL + transitive kgforge callees/constants."""
+    parts = [f"sql::{sql or ''}", *_walk(fn)[1]]
     return hashlib.sha256("\n".join(sorted(parts)).encode()).hexdigest()
 
 

@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kgforge import canon, pipeline
 from kgforge.tables import load
 
 MIN_TOKEN_LEN = 4
@@ -263,8 +264,6 @@ def derive_canonical_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph/pipeline op needs this same map, and canonical_map_auto costs a
     driver union-find pass per call — once per (application, sf_dir) is
     enough."""
-    from kgforge import canon
-
     return _memo(
         spark,
         sf_dir,
@@ -274,3 +273,30 @@ def derive_canonical_map(spark: SparkSession, sf_dir: str) -> DataFrame:
             derive_xref_edges(spark, sf_dir),
         ),
     )
+
+
+def derive_linked(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Memoized linked mentions over the derived corpus, built by the batch
+    pipeline's own stage (pipeline.extract_link, PipelineConfig's default
+    layout). Every registered key that needs mentions or linked mentions
+    reads this one session cut, so a session runs the Python matcher once
+    per sf_dir however many such keys it serves.
+
+    The cut also carries every mention: the matcher's lexicon is the
+    dictionary's surfaces and this corpus's surfaces are already normalized
+    lowercase words, so each mention links exactly once. The matcher's own
+    cache is therefore released once this one is loaded, as run_pipeline
+    releases it once ``linked`` is written."""
+    key = (spark.sparkContext.applicationId, sf_dir, "linked")
+    linked = _MEMO.get(key)
+    if linked is None:
+        mentions, linked = pipeline.extract_link(
+            derive_transcripts(spark, sf_dir),
+            derive_dictionary(spark, sf_dir),
+            pipeline.NUM_PARTITIONS,
+            pipeline.TARGET_ROWS,
+        )
+        linked = _MEMO[key] = linked.persist()
+        linked.count()  # loads the cache; nothing reads mentions after it
+        mentions.unpersist()
+    return linked

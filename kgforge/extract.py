@@ -23,7 +23,6 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     IntegerType,
     StringType,
@@ -127,15 +126,3 @@ def extract_mentions(transcripts: DataFrame, dictionary: DataFrame) -> DataFrame
     )
     return narrow.mapInPandas(run, MENTIONS_SCHEMA)
 
-
-def mint_mention_id(df: DataFrame) -> DataFrame:
-    """Deterministic mention id (md5 of provenance) — stable across reruns,
-    which is what makes downstream MERGE idempotent (SURVEY.md §3.3)."""
-    return df.withColumn(
-        "mention_id",
-        F.md5(
-            F.concat_ws(
-                "|", "conv_id", F.col("turn_idx").cast("string"), F.col("m_idx").cast("string")
-            )
-        ),
-    )

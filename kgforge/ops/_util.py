@@ -71,7 +71,7 @@ def session_memo(memo, spark, sf_dir, build):
     body ``persist()``s an intermediate cut (ADVICE r04): a long-lived
     session that invokes such an op repeatedly must reuse the first call's
     persisted cut instead of stacking one new cached copy per call. Keyed
-    exactly like ``corpus._MEMO`` / ``kgfuse._REMAPPED_MEMO`` so a new
+    exactly like ``corpus._MEMO`` / ``pipeline_ops._REMAPPED_MEMO`` so a new
     SparkSession (new applicationId) naturally re-derives."""
     key = (spark.sparkContext.applicationId, sf_dir)
     got = memo.get(key)

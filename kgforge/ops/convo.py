@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kgforge import corpus
-from kgforge.ops import _util, kgfuse
+from kgforge.ops import _util, kgfuse, pipeline_ops
 from kgforge.ops.pipeline_ops import _PRELUDE
 from kgforge.registry import register
 from kgforge.tables import load
@@ -210,7 +210,7 @@ _MIDX_PAD = 6
     ),
 )
 def kg_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
-    rem = kgfuse.remapped_triples(spark, sf_dir)
+    rem = pipeline_ops.remapped_triples(spark, sf_dir)
     n_conv = max(20, corpus.n_docs(spark, sf_dir) // 8)
     cutoff = corpus.n_docs(spark, sf_dir) * ASOF_NUM // ASOF_DEN
     return asof_triples(rem, n_conv, cutoff)

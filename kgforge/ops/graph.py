@@ -8,9 +8,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from kgforge import canon, corpus, extract, link, triples
-from kgforge.ops import pipeline_ops
+from kgforge import canon, corpus
+from kgforge.ops import _util, pipeline_ops
 from kgforge.registry import register
+from kgforge.tables import load
 
 
 @register(
@@ -40,11 +41,7 @@ from kgforge.registry import register
     ),
 )
 def graph_remap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tr = corpus.derive_transcripts(spark, sf_dir)
-    d = corpus.derive_dictionary(spark, sf_dir)
-    m = extract.extract_mentions(tr, d)
-    linked = link.link_mentions(m, d)
-    resolved = linked.selectExpr(
+    resolved = corpus.derive_linked(spark, sf_dir).selectExpr(
         "entity_id AS subj",
         "'resolved_as' AS pred",
         "curie AS obj",
@@ -90,9 +87,7 @@ def graph_remap(spark: SparkSession, sf_dir: str) -> DataFrame:
 def graph_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
-    tr = corpus.derive_transcripts(spark, sf_dir)
-    d = corpus.derive_dictionary(spark, sf_dir)
-    linked = link.link_mentions(extract.extract_mentions(tr, d), d)
+    linked = corpus.derive_linked(spark, sf_dir)
     cmap = corpus.derive_canonical_map(spark, sf_dir)
     resolved = (
         linked.join(
@@ -261,8 +256,6 @@ def undirected_entity_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     so per-call persists would stack seven cached copies of the same
     edge set in one session (the ADVICE r04 leak class)."""
     from pyspark.sql import functions as F
-
-    from kgforge.ops import _util
 
     def build() -> DataFrame:
         tri = pipeline_ops.pipe_triples(spark, sf_dir)
@@ -450,8 +443,6 @@ def coorder_part_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     memoized per (applicationId, sf_dir): three registered keys (jaccard,
     kcore, khop) share this cut, so per-call persists would stack cached
     copies and re-run the lineitem self-join per key (ADVICE r04 class)."""
-    from kgforge.ops import _util
-    from kgforge.tables import load
     from pyspark.sql import functions as F
 
     def build() -> DataFrame:

@@ -22,7 +22,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from kgforge import canon, corpus, extract, link, triples
 from kgforge.ops import graph, pipeline_ops
 from kgforge.registry import register
 
@@ -35,35 +34,6 @@ _TRIPLES_PREFIX = (
     + ",\n"
     + pipeline_ops._TRIPLES_CTE
 )
-
-# Pre-dedup (per-occurrence) triple cut, memoized per (applicationId,
-# sf_dir) like pipeline_ops._TRIPLES_MEMO. kg_fusion needs OCCURRENCE
-# counts, which final_triples drops at its first-emission dedup, so the
-# memoized final cut can't serve it; this helper persists the remapped cut
-# once instead of re-running extract -> link per fusion-family key.
-# (Deliberately a separate code path from pipe_triples: reusing its body
-# would change its fingerprint and force a window rotation of every key in
-# its closure for a perf-only change.)
-_REMAPPED_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-
-def remapped_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    got = _REMAPPED_MEMO.get(key)
-    if got is not None:
-        return got
-    tr = corpus.derive_transcripts(spark, sf_dir)
-    d = corpus.derive_dictionary(spark, sf_dir)
-    m = extract.extract_mentions(tr, d)
-    # Same cross-branch-CSE trap as pipe_triples: the three triple branches
-    # + two remap join sides would re-run the matcher UDF 6x unpersisted.
-    linked = link.link_mentions(m, d).persist()
-    raw = triples.build_raw_triples(linked)
-    cmap = corpus.derive_canonical_map(spark, sf_dir)
-    out = canon.remap_triples(raw, cmap).persist()
-    _REMAPPED_MEMO[key] = out
-    return out
-
 
 # ----------------------------------------------------------------- fusion
 # Inverted-support encode width: support is a BIGINT occurrence count, far
@@ -103,7 +73,7 @@ _FUSION_INV = 999_999_999_999
     ),
 )
 def kg_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    rem = remapped_triples(spark, sf_dir)
+    rem = pipeline_ops.remapped_triples(spark, sf_dir)
     return fuse_triples(rem)
 
 

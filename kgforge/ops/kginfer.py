@@ -50,6 +50,12 @@ from kgforge.tables import load
 KHOP_SEEDS = 24
 KHOP_HOPS = 3
 
+# khop_neighborhoods and preference_pairs persist a cut per call; memoize
+# both keys per (app, sf_dir) so repeated invocations reuse the first
+# call's cut instead of stacking one cached copy per call (ADVICE r05)
+_KHOP_MEMO: dict[tuple[str, str], DataFrame] = {}
+_PREF_MEMO: dict[tuple[str, str], DataFrame] = {}
+
 
 @register(
     "graph_khop",
@@ -98,17 +104,20 @@ KHOP_HOPS = 3
     ),
 )
 def graph_khop(spark: SparkSession, sf_dir: str) -> DataFrame:
-    und = graph.coorder_part_edges(spark, sf_dir)
-    adj = und.select(F.col("a").alias("u"), F.col("b").alias("v")).unionAll(
-        und.select(F.col("b").alias("u"), F.col("a").alias("v"))
-    )
-    seeds = (
-        adj.select(F.col("u").alias("node"))
-        .distinct()
-        .orderBy("node")
-        .limit(KHOP_SEEDS)
-    )
-    return khop_neighborhoods(adj, seeds)
+    def build() -> DataFrame:
+        und = graph.coorder_part_edges(spark, sf_dir)
+        adj = und.select(F.col("a").alias("u"), F.col("b").alias("v")).unionAll(
+            und.select(F.col("b").alias("u"), F.col("a").alias("v"))
+        )
+        seeds = (
+            adj.select(F.col("u").alias("node"))
+            .distinct()
+            .orderBy("node")
+            .limit(KHOP_SEEDS)
+        )
+        return khop_neighborhoods(adj, seeds)
+
+    return _util.session_memo(_KHOP_MEMO, spark, sf_dir, build)
 
 
 def khop_neighborhoods(
@@ -336,7 +345,7 @@ _ASOF_CTE = """
     ),
 )
 def kg_temporal_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    rem = kgfuse.remapped_triples(spark, sf_dir)
+    rem = pipeline_ops.remapped_triples(spark, sf_dir)
     n_conv = max(20, corpus.n_docs(spark, sf_dir) // 8)
     nd = corpus.n_docs(spark, sf_dir)
     t1 = convo.asof_triples(rem, n_conv, nd * DIFF_NUM1 // DIFF_DEN1)
@@ -508,8 +517,12 @@ _PAIRS_CTE = """
     ),
 )
 def pair_preference(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pairs = convo.sft_pairs(corpus.derive_transcripts(spark, sf_dir))
-    return preference_pairs(pairs)
+    return _util.session_memo(
+        _PREF_MEMO, spark, sf_dir,
+        lambda: preference_pairs(
+            convo.sft_pairs(corpus.derive_transcripts(spark, sf_dir))
+        ),
+    )
 
 
 def preference_pairs(pairs: DataFrame) -> DataFrame:

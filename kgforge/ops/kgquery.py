@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kgforge import corpus
 from kgforge.ops import graph, pipeline_ops
 from kgforge.registry import register
 
@@ -299,8 +300,6 @@ def sssp_distances(
     ),
 )
 def graph_comp_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kgforge import corpus
-
     cmap = corpus.derive_canonical_map(spark, sf_dir)
     return (
         cmap.groupBy("canonical_id")

@@ -19,7 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kgforge import canon, corpus, extract, link, triples
+from kgforge import canon, corpus, pipeline, triples
+from kgforge.ops import _util
 from kgforge.registry import register
 
 # Shared CTE prefix: transcripts + dictionary + canonical map, mirrored from
@@ -129,9 +130,10 @@ def pipe_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def udf_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tr = corpus.derive_transcripts(spark, sf_dir)
-    d = corpus.derive_dictionary(spark, sf_dir)
-    return extract.extract_mentions(tr, d)
+    # the session's linked cut holds each mention once (derive_linked)
+    return corpus.derive_linked(spark, sf_dir).select(
+        "conv_id", "turn_idx", "m_idx", "surface", "begin", "end"
+    )
 
 
 @register(
@@ -141,10 +143,7 @@ def udf_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Broadcast-head + sort-merge-tail entity linking with rank-1 disambiguation.",
 )
 def udf_link(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tr = corpus.derive_transcripts(spark, sf_dir)
-    d = corpus.derive_dictionary(spark, sf_dir)
-    m = extract.extract_mentions(tr, d)
-    return link.link_mentions(m, d).select(
+    return corpus.derive_linked(spark, sf_dir).select(
         "conv_id", "turn_idx", "m_idx", "entity_id", "curie", "prior"
     )
 
@@ -165,15 +164,27 @@ def graph_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     return canon.canonical_map(d.select("entity_id"), edges)
 
 
-# Final triple set memo, keyed like corpus._MEMO: every graph-analytics
-# key (cc, pagerank, degrees, triangles, jaccard, bfs, remap, nodes, cdc)
-# starts from pipe_triples, and each registered query is self-contained —
-# without the memo a single driver/bench session re-runs the whole
-# extract → link → dedup dataflow once per key. The triple set is
-# deterministic per sf_dir and entity-bounded (~1k rows), so caching the
-# persisted cut is exactly the corpus-derivation precedent. Stale entries
-# from stopped sessions never hit (fresh applicationId).
+# Triple-stage session cuts, memoized per (applicationId, sf_dir) like
+# corpus._MEMO: every graph-analytics key starts from pipe_triples and the
+# fusion/as-of family from remapped_triples, and each registered query is
+# self-contained — without the memos a driver/bench session re-runs the
+# triple dataflow once per key. Both cuts are deterministic per sf_dir and
+# read the session's one linked cut (corpus.derive_linked).
 _TRIPLES_MEMO: dict[tuple[str, str], DataFrame] = {}
+_REMAPPED_MEMO: dict[tuple[str, str], DataFrame] = {}
+
+
+def remapped_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-occurrence canonical triples (before the first-emission dedup,
+    which drops the occurrence counts kg_fusion and the as-of keys need)."""
+
+    def build() -> DataFrame:
+        raw = triples.build_raw_triples(corpus.derive_linked(spark, sf_dir))
+        return canon.remap_triples(
+            raw, corpus.derive_canonical_map(spark, sf_dir)
+        ).persist()
+
+    return _util.session_memo(_REMAPPED_MEMO, spark, sf_dir, build)
 
 
 @register(
@@ -187,33 +198,19 @@ _TRIPLES_MEMO: dict[tuple[str, str], DataFrame] = {}
     ),
 )
 def pipe_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    got = _TRIPLES_MEMO.get(key)
-    if got is not None:
-        return got
-    tr = corpus.derive_transcripts(spark, sf_dir)
-    d = corpus.derive_dictionary(spark, sf_dir)
-    edges = corpus.derive_xref_edges(spark, sf_dir)
-    m = extract.extract_mentions(tr, d)
-    # Catalyst has no cross-branch common-subplan elimination: the three
-    # triple branches + two remap join sides would re-run the extraction UDF
-    # and linking join SIX times (seen in .explain: 6× MapInPandas). Persist
-    # at the linked boundary — the same cut where the real pipeline
-    # materializes to the warehouse for resumability.
-    linked = link.link_mentions(m, d).persist()
-    raw = triples.build_raw_triples(linked)
-    cmap = corpus.derive_canonical_map(spark, sf_dir)
-    remapped = canon.remap_triples(raw, cmap)
-    # linked rows = docs × measured link density (a bounded pyarrow head
-    # sample — zero Spark jobs, like the footer row count); the constant-44
-    # round-3 estimate engaged the wrong strategy on corpora with different
-    # link density (VERDICT r03 #5)
-    est_linked = corpus.n_docs(spark, sf_dir) * corpus.est_links_per_doc(sf_dir)
-    out = triples.dedup_triples(
-        remapped, two_level=est_linked >= triples.TWO_LEVEL_MIN_ROWS
-    ).persist()
-    _TRIPLES_MEMO[key] = out
-    return out
+    def build() -> DataFrame:
+        # linked rows = docs × measured link density (a bounded pyarrow head
+        # sample — zero Spark jobs, like the footer row count); the
+        # constant-44 round-3 estimate engaged the wrong strategy on corpora
+        # with different link density (VERDICT r03 #5)
+        est_linked = corpus.n_docs(spark, sf_dir) * corpus.est_links_per_doc(sf_dir)
+        return pipeline.build_triples(
+            corpus.derive_linked(spark, sf_dir),
+            corpus.derive_canonical_map(spark, sf_dir),
+            two_level=est_linked >= triples.TWO_LEVEL_MIN_ROWS,
+        ).persist()
+
+    return _util.session_memo(_TRIPLES_MEMO, spark, sf_dir, build)
 
 
 @register(
@@ -300,9 +297,7 @@ def udf_score_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    tr = corpus.derive_transcripts(spark, sf_dir)
-    d = corpus.derive_dictionary(spark, sf_dir)
-    linked = link.link_mentions(extract.extract_mentions(tr, d), d).select(
+    linked = corpus.derive_linked(spark, sf_dir).select(
         "conv_id", "turn_idx", "m_idx", "entity_id", "surface", "prior"
     )
 
@@ -489,7 +484,6 @@ def scan_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
 def pipe_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
-    from kgforge import metrics
     from kgforge.io.tableio import Warehouse
 
     wh = Warehouse(tempfile.mkdtemp(prefix="kgforge_incr_"))
@@ -500,16 +494,16 @@ def pipe_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     conv_ord = F.substring("conv_id", 2, 10).cast("int")
     for parity in (0, 1):
         batch = tr.where(conv_ord % 2 == parity)
-        linked = link.link_mentions(extract.extract_mentions(batch, d), d).persist()
-        tri = triples.dedup_triples(
-            canon.remap_triples(triples.build_raw_triples(linked), cmap),
-            two_level=False,  # per-batch input is far below TWO_LEVEL_MIN_ROWS
+        # a batch keeps the parallelism it arrives with, as a streaming
+        # micro-batch does (kg_ingest.process_batch)
+        mentions, linked = pipeline.extract_link(
+            batch, d, batch.rdd.getNumPartitions(), pipeline.TARGET_ROWS
         )
-        tri = metrics.with_lineage_part_of(tri, ["subj", "pred", "obj"])
-        wh.merge(
-            spark, "triples", tri, keys=["subj", "pred", "obj"],
-            partition_by=["lineage_part"], source_unique=True,
-            part_determined_by_keys=True,
+        linked = linked.persist()
+        # per-batch input is far below TWO_LEVEL_MIN_ROWS
+        pipeline.merge_triples(
+            spark, wh, pipeline.build_triples(linked, cmap, two_level=False)
         )
         linked.unpersist()
+        mentions.unpersist()
     return wh.read(spark, "triples").select("subj", "pred", "obj", "confidence")

@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from kgforge import canon
 from kgforge.registry import register
 from kgforge.tables import load
 
@@ -270,8 +271,6 @@ def near_dup_clusters(docs: DataFrame, pairs: DataFrame | None = None) -> DataFr
     (canonical_map_auto), the entity derivation, AND the size join, and
     Catalyst has no cross-branch CSE, so an unpersisted pair plan would
     re-run the banded candidate+verify joins once per reference."""
-    from kgforge import canon
-
     if pairs is None:
         pairs = minhash_pairs(docs).persist()
     # canonical_map is string-typed; fixed-width zero padding makes the

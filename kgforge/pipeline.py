@@ -22,20 +22,71 @@ import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from kgforge import canon, extract, link, metrics, skew, triples
 from kgforge.io.tableio import Warehouse
+
+
+# PipelineConfig defaults; the registry's session cuts
+# (corpus.derive_linked) extract with the same layout
+NUM_PARTITIONS = 32
+TARGET_ROWS = 1000
 
 
 @dataclass
 class PipelineConfig:
     warehouse_root: str
     run_id: str = "run-1"
-    num_partitions: int = 32
+    num_partitions: int = NUM_PARTITIONS
     hot_threshold: int = 2000
-    target_rows: int = 1000
+    target_rows: int = TARGET_ROWS
     observed: dict = field(default_factory=dict)
+
+
+def extract_link(
+    transcripts: DataFrame,
+    dictionary: DataFrame,
+    num_partitions: int,
+    target_rows: int,
+) -> tuple[DataFrame, DataFrame]:
+    """transcripts → (mentions, linked): salted repartition, the matcher,
+    then linking. ``mentions`` comes back persisted — the broadcast head and
+    the sort-merge tail of link_mentions both read it, and without the cut
+    the Python matcher runs once per join side — so the caller unpersists it
+    once ``linked`` has been materialized."""
+    # project to the extraction columns BEFORE the shuffle — role/tool/ts
+    # would otherwise ride the repartition + Arrow transfer for nothing
+    salted = skew.salted_repartition(
+        transcripts.select("conv_id", "turn_idx", "text"),
+        num_partitions,
+        target_rows=target_rows,
+    )
+    mentions = extract.extract_mentions(salted, dictionary).persist()
+    return mentions, link.link_mentions(mentions, dictionary)
+
+
+def build_triples(linked: DataFrame, cmap: DataFrame, two_level: bool) -> DataFrame:
+    """linked mentions → canonical, first-emission deduplicated triples.
+    ``two_level`` picks the dedup shape (triples.TWO_LEVEL_MIN_ROWS); callers
+    decide it from metadata, never from a count job."""
+    raw = triples.build_raw_triples(linked)
+    return triples.dedup_triples(canon.remap_triples(raw, cmap), two_level=two_level)
+
+
+def merge_triples(spark: SparkSession, wh: Warehouse, final: DataFrame) -> None:
+    """MERGE deduplicated triples into the warehouse's ``triples`` table."""
+    # lineage_part for the TRIPLES table derives from the merge keys, not
+    # from the provenance conv_id: the partition-scoped merge is only sound
+    # when partition = f(keys) (tableio merge docstring). conv_id is
+    # provenance here — an incremental batch can re-emit an existing triple
+    # with a different first-emission conv_id, which under conv_id
+    # partitioning would dodge the scoped anti-join and duplicate the row.
+    final = metrics.with_lineage_part_of(final, ["subj", "pred", "obj"])
+    # source_unique: dedup_triples output is grouped by exactly these keys —
+    # the sink's defensive dropDuplicates would re-shuffle the whole table
+    wh.merge(spark, "triples", final, keys=["subj", "pred", "obj"],
+             partition_by=["lineage_part"], source_unique=True,
+             part_determined_by_keys=True)
 
 
 def run_pipeline(
@@ -60,18 +111,10 @@ def run_pipeline(
     tr = metrics.with_lineage_part(transcripts)
     done = metrics.done_parts(wh, spark, "linked", cfg.run_id)
     todo = metrics.filter_resume(tr, done)
-    # project to the extraction columns BEFORE the shuffle — role/tool/ts
-    # would otherwise ride the repartition + Arrow transfer for nothing
-    salted = skew.salted_repartition(
-        todo.select("conv_id", "turn_idx", "text"),
-        cfg.num_partitions,
-        cfg.hot_threshold,
-        cfg.target_rows,
+    mentions, linked = extract_link(
+        todo, dictionary, cfg.num_partitions, cfg.target_rows
     )
-    # the broadcast head and the sort-merge tail of link_mentions both read
-    # mentions: without this cut the Python matcher runs once per join side
-    mentions = extract.extract_mentions(salted, dictionary).persist()
-    linked = metrics.with_lineage_part(link.link_mentions(mentions, dictionary))
+    linked = metrics.with_lineage_part(linked)
     resuming = done is not None and done.limit(1).count() > 0
     if resuming:
         # merge reads linked once and the caller gets the merged table, so
@@ -100,26 +143,13 @@ def run_pipeline(
     mark("canonicalize")
 
     # ---- stage 3: triples + canonical remap + dedup + MERGE --------------
-    raw = triples.build_raw_triples(linked_all)
-    remapped = canon.remap_triples(raw, cmap)
     # two-level dedup only above the threshold — decided from the manifest
     # row count (zero Spark jobs; cfg.observed["linked_rows"] is already it)
-    final = triples.dedup_triples(
-        remapped,
+    final = build_triples(
+        linked_all, cmap,
         two_level=cfg.observed["linked_rows"] >= triples.TWO_LEVEL_MIN_ROWS,
     )
-    # lineage_part for the TRIPLES table derives from the merge keys, not
-    # from the provenance conv_id: the partition-scoped merge is only sound
-    # when partition = f(keys) (tableio merge docstring). conv_id is
-    # provenance here — an incremental batch can re-emit an existing triple
-    # with a different first-emission conv_id, which under conv_id
-    # partitioning would dodge the scoped anti-join and duplicate the row.
-    final = metrics.with_lineage_part_of(final, ["subj", "pred", "obj"])
-    wh.merge(spark, "triples", final, keys=["subj", "pred", "obj"],
-             partition_by=["lineage_part"], source_unique=True,
-             part_determined_by_keys=True)
-    # source_unique: dedup_triples output is grouped by exactly these keys —
-    # the sink's defensive dropDuplicates would re-shuffle the whole table
+    merge_triples(spark, wh, final)
     metrics.record_stage_from_files(wh, "triples", "triples", cfg.run_id)
     mark("triples_merge")
 

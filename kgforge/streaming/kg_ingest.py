@@ -1,9 +1,10 @@
 """Streaming KG ingestion: transcripts arrive as a stream; each micro-batch
-runs the SAME extract → link dataflow as the batch pipeline and MERGEs into
-the warehouse; canonicalization + triple materialization run on the merged
-table (triples are corpus-level — cross-turn adjacency can span micro-
-batches, so they finalize after ingestion; at production scale this is the
-periodic compaction pass over a continuously-ingested linked table).
+runs the batch pipeline's own extract → link stage (pipeline.extract_link)
+and MERGEs into the warehouse; canonicalization + triple materialization run
+on the merged table (triples are corpus-level — cross-turn adjacency can
+span micro-batches, so they finalize after ingestion; at production scale
+this is the periodic compaction pass over a continuously-ingested linked
+table).
 
 Idempotence: mention keys (conv_id, turn_idx, m_idx) are deterministic, so a
 replayed micro-batch (failure/retry) merges to a no-op — the streaming
@@ -16,7 +17,7 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
-from kgforge import canon, extract, link, metrics, triples
+from kgforge import canon, metrics, pipeline, triples
 from kgforge.io.tableio import Warehouse
 from kgforge.streaming import replay
 
@@ -48,10 +49,13 @@ def ingest(
     wh = Warehouse(warehouse_root)
 
     def process_batch(bdf: DataFrame, batch_id: int) -> None:
-        mentions = extract.extract_mentions(
-            bdf.select("conv_id", "turn_idx", "text"), dictionary
+        # a micro-batch keeps the parallelism it arrives with (one task per
+        # source split): the batch default of 32 partitions builds the
+        # matcher once per task, which on a small micro-batch costs more
+        # than the matching itself
+        mentions, linked = pipeline.extract_link(
+            bdf, dictionary, bdf.rdd.getNumPartitions(), pipeline.TARGET_ROWS
         )
-        linked = metrics.with_lineage_part(link.link_mentions(mentions, dictionary))
         # Partitioned by lineage_part = f(conv_id) with conv_id a merge key,
         # so micro-batches 2..N take the PARTITION-SCOPED merge: only the
         # lineage parts this batch's conversations hash into are anti-joined
@@ -59,10 +63,11 @@ def ingest(
         # (inode-asserted in tests/test_streaming.py). At scale that makes
         # per-micro-batch sink cost proportional to the batch, not the table.
         wh.merge(
-            bdf.sparkSession, "linked", linked,
+            bdf.sparkSession, "linked", metrics.with_lineage_part(linked),
             keys=["conv_id", "turn_idx", "m_idx"],
             partition_by=["lineage_part"], part_determined_by_keys=True,
         )
+        mentions.unpersist()
 
     q = (
         stream.writeStream.foreachBatch(process_batch)
@@ -83,17 +88,11 @@ def finalize(
     linked table — identical code path to the batch pipeline's stage 3."""
     wh = Warehouse(warehouse_root)
     linked_all = wh.read(spark, "linked").persist()
-    raw = triples.build_raw_triples(linked_all)
     cmap = canon.canonical_map_auto(dictionary.select("entity_id").distinct(), xref_edges)
-    final = metrics.with_lineage_part_of(
-        triples.dedup_triples(
-            canon.remap_triples(raw, cmap),
-            # manifest row count decides the dedup shape — no count job
-            two_level=wh.rows("linked") >= triples.TWO_LEVEL_MIN_ROWS,
-        ),
-        ["subj", "pred", "obj"],  # partition = f(merge keys): scoped-merge sound
+    # manifest row count decides the dedup shape — no count job
+    two_level = wh.rows("linked") >= triples.TWO_LEVEL_MIN_ROWS
+    pipeline.merge_triples(
+        spark, wh, pipeline.build_triples(linked_all, cmap, two_level=two_level)
     )
-    wh.merge(spark, "triples", final, keys=["subj", "pred", "obj"],
-             partition_by=["lineage_part"], source_unique=True,
-             part_determined_by_keys=True)
+    linked_all.unpersist()
     return wh.read(spark, "triples")

@@ -151,3 +151,16 @@ def test_auto_deep_descending_chain_no_recursion_error(spark):
     # c00000 is isolated and self-maps.
     assert got["c00000"] == "c00000"
     assert {got[f"c{i:05d}"] for i in range(1, n + 1)} == {"c00001"}
+
+
+def test_capped_fixpoints_raise(spark):
+    """A chain needs more rounds than either cap allows: both fixpoints must
+    raise instead of returning a partly contracted map."""
+    from kgforge.canon import NotConverged, connected_components_star
+
+    edges = [(f"q{i:03d}", f"q{i + 1:03d}", "t") for i in range(63)]
+    df = spark.createDataFrame(edges, "src string, dst string, source string")
+    with pytest.raises(NotConverged):
+        connected_components_star(df, max_rounds=2)
+    with pytest.raises(NotConverged):
+        connected_components(df, max_iter=2)

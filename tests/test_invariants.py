@@ -47,12 +47,14 @@ def test_triples_invariant_to_partition_count(spark, spark_corpus):
 
 
 def test_mention_ids_stable(spark, spark_corpus):
+    """A mention's key (conv_id, turn_idx, m_idx) and span must not depend
+    on the physical layout: the warehouse MERGE is keyed on them."""
     tr, d, _ = spark_corpus
-    m1 = extract.mint_mention_id(extract.extract_mentions(tr, d))
-    m2 = extract.mint_mention_id(extract.extract_mentions(tr.repartition(7), d))
-    ids1 = sorted(r["mention_id"] for r in m1.collect())
-    ids2 = sorted(r["mention_id"] for r in m2.collect())
-    assert ids1 == ids2
+    cols = ["conv_id", "turn_idx", "m_idx", "surface", "begin", "end"]
+    m1 = extract.extract_mentions(tr, d).select(*cols)
+    m2 = extract.extract_mentions(tr.repartition(7), d).select(*cols)
+    rows1 = sorted(map(tuple, m1.collect()))
+    assert rows1 and rows1 == sorted(map(tuple, m2.collect()))
 
 
 def test_dedup_triples_two_level_equals_single_level(spark):

@@ -150,3 +150,14 @@ def test_preference_pairs_degenerate_pool_self_filters(spark):
     )
     # pool = {rhA}: every draw collides with the chosen response -> dropped
     assert kginfer.preference_pairs(one).count() == 0
+
+
+def test_repeated_calls_stack_no_caches(spark):
+    """graph_khop and pair_preference persist a cut inside their bodies; a
+    second call in the same session must reuse the first call's cut."""
+    jsc = spark.sparkContext._jsc
+    for fn in (kginfer.graph_khop, kginfer.pair_preference):
+        fn(spark, SF_TINY).count()
+        before = jsc.getPersistentRDDs().size()
+        fn(spark, SF_TINY).count()
+        assert jsc.getPersistentRDDs().size() == before, fn.__name__

@@ -4,12 +4,20 @@
   session's codegen cache holds a whole call (kgforge/session.py).
 - Extraction: the Python matcher runs once per call, although the broadcast
   head and the sort-merge tail of the link join both read the mentions.
+- Registry session: every key built on mentions or linked mentions reads
+  one session cut, so a session runs the matcher once however many such
+  keys it serves.
 """
 
 from __future__ import annotations
 
+import os
+import shutil
+
+from kgforge import extract, registry
 from kgforge.io.tableio import Warehouse
 from kgforge.pipeline import PipelineConfig, run_pipeline
+from tests.conftest import SF_TINY
 from tests.test_resume import _release
 
 
@@ -77,3 +85,38 @@ def test_linked_runs_matcher_once(spark, spark_corpus, tmp_path, monkeypatch):
     n = _count_nodes(spark._jvm, plan, "MapInPandas", set())
     _release(out)
     assert n == 1, n
+
+
+SESSION_KEYS = ["pipe_triples", "kg_fusion", "graph_degree", "udf_link",
+                "udf_mentions", "udf_score_arrow", "graph_remap", "graph_nodes"]
+
+
+def test_session_runs_matcher_once(spark, tmp_path, monkeypatch):
+    # a fresh sf_dir path: no session cut an earlier test built applies
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    shutil.copy(os.path.join(SF_TINY, "documents.parquet"), sf)
+    calls = []
+    real = extract.extract_mentions
+
+    def spy(*args, **kwargs):
+        calls.append(1)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(extract, "extract_mentions", spy)
+    ops = registry.all_ops()
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = persistent().size()
+    seen: set = set()
+    n = 0
+    for key in SESSION_KEYS:
+        df = ops[key].fn(spark, str(sf))
+        df.collect()
+        n += _count_nodes(spark._jvm, df._jdf.queryExecution().executedPlan(),
+                          "MapInPandas", seen)
+    added = persistent().size() - before
+    assert len(calls) == 1, len(calls)
+    assert n == 1, n
+    # transcripts, dictionary, xref edges, canonical map, linked mentions,
+    # remapped triples, final triples
+    assert added <= 7, added

@@ -14,12 +14,12 @@ from kgforge import canon, extract, link, skew, synth, triples
 from tests import oracle_ref
 
 
-def _spark_spo(spark, corpus, *, salted: bool = False, split: str = "hash") -> set:
+def _spark_spo(spark, corpus, *, salted: bool = False) -> set:
     tr, d, e = synth.to_spark(spark, corpus)
     if salted:
         tr = skew.salted_repartition(tr, 8, target_rows=7)
     m = extract.extract_mentions(tr, d)
-    linked = link.link_mentions(m, d, split=split)
+    linked = link.link_mentions(m, d)
     raw = triples.build_raw_triples(linked)
     cmap = canon.canonical_map(d.select("entity_id"), e)
     final = triples.dedup_triples(canon.remap_triples(raw, cmap))
@@ -52,19 +52,11 @@ def test_pipeline_matches_reference_on_random_corpora(spark, seed):
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 @given(seed=st.integers(min_value=0, max_value=2**30))
-def test_salted_freq_pipeline_matches_reference(spark, seed):
-    """The two round-2 fast paths COMPOSED — salted extraction (turn-derived
-    salt splits hot conversations) + split="freq" linking (top-k surface
-    head broadcast, long tail through SMJ) — must agree with the independent
-    pure-Python reference on random mixed single/multi-word dictionaries.
-    top_k is forced small so BOTH the broadcast head and the sort-merge tail
-    carry real traffic (the default 100k head would swallow a toy corpus),
-    and target_rows=7 forces genuine multi-slice salting."""
-    orig = link.split_dictionary_freq
-
-    def small_head(mentions, dictionary, top_k=12):
-        return orig(mentions, dictionary, top_k=top_k)
-
+def test_salted_pipeline_matches_reference(spark, seed):
+    """Salted extraction (turn-derived salt splits hot conversations) must
+    agree with the independent pure-Python reference on random mixed
+    single/multi-word dictionaries; target_rows=7 forces genuine
+    multi-slice salting."""
     corpus = synth.make_corpus(
         seed=seed, n_convs=20, n_entities=100, n_hot=2,
         hot_turns=(40, 90), max_turns=25,
@@ -73,11 +65,7 @@ def test_salted_freq_pipeline_matches_reference(spark, seed):
         corpus.transcripts, corpus.dictionary, corpus.xref_edges
     )
     golden = {(s, p, o) for s, p, o, *_ in ref["triples"]}
-    link.split_dictionary_freq = small_head
-    try:
-        got = _spark_spo(spark, corpus, salted=True, split="freq")
-    finally:
-        link.split_dictionary_freq = orig
+    got = _spark_spo(spark, corpus, salted=True)
     assert got == golden
 
 

@@ -70,8 +70,6 @@ def test_keys_past_window_are_certified_unchanged():
     fps = certify.current_fingerprints()
     problems = []
     for key in registry._ORDER[50:]:
-        if key in registry.POST_ROTATION_NEW:
-            continue  # registered post-rotation: no prior coverage to lose
         ent = certified.get(key)
         if ent is None:
             problems.append(f"{key}: past window with no certified driver row")
@@ -105,3 +103,26 @@ def test_certified_rounds_actually_green():
             row.get("err") == "no_oracle" and row.get("spark_rows", 0) >= 0
         )
         assert ok, f"{key}: {rnd} row not green: {row}"
+
+
+def test_fingerprint_walk_reaches_the_shared_stages():
+    """The keys that read the session's linked cut or canonical map must
+    re-fingerprint when the matcher, the linker or the connected-components
+    fixpoints change. A function-local ``from kgforge import ...`` hides the
+    module from the static walk, so this pins the path through
+    corpus.derive_linked / derive_canonical_map (and similarity's
+    near_dup_clusters) down to the code that does the work."""
+    from kgforge import certify
+
+    ops = registry.all_ops()
+    reached, _ = certify._walk(ops["udf_link"].fn)
+    for fn in (
+        "kgforge.pipeline.extract_link",
+        "kgforge.extract.extract_mentions",
+        "kgforge.link.link_mentions",
+        "kgforge.skew.salted_repartition",
+    ):
+        assert fn in reached, f"udf_link's fingerprint misses {fn}"
+    for key in ("graph_comp_sizes", "dedup_clusters"):
+        reached, _ = certify._walk(ops[key].fn)
+        assert "kgforge.canon.connected_components_star" in reached, key

@@ -67,31 +67,3 @@ def test_salted_pipeline_equals_unsalted(spark, spark_corpus):
         map(tuple, salted.select(*cols).collect())
     )
 
-
-def test_freq_split_linking_equals_hash_split(spark, spark_corpus):
-    """Frequency-based head/tail dictionary split (production path for
-    skewed surface usage) must produce the identical linked relation as the
-    hash split — both are disjoint ∪ exhaustive partitions on the key."""
-    tr, d, _ = spark_corpus
-    mentions = extract.extract_mentions(tr, d)
-    cols = ["conv_id", "turn_idx", "m_idx", "surface", "entity_id", "curie", "prior"]
-    a = sorted(map(tuple, link.link_mentions(mentions, d).select(*cols).collect()))
-    b = sorted(map(tuple,
-                   link.link_mentions(mentions, d, split="freq").select(*cols).collect()))
-    assert a == b and len(a) > 0
-
-
-def test_freq_split_head_covers_hot_surfaces(spark, spark_corpus):
-    """With a Zipf-skewed corpus, the freq head must contain every hot
-    surface (the ones carrying most mention mass)."""
-    tr, d, _ = spark_corpus
-    mentions = extract.extract_mentions(tr, d)
-    head, tail = link.split_dictionary_freq(mentions, d, top_k=50)
-    top = {r["surface"] for r in
-           mentions.groupBy("surface").count().orderBy(F.desc("count"), "surface")
-           .limit(10).collect()}
-    head_surfaces = {r["surface"] for r in head.select("surface").collect()}
-    assert top <= head_surfaces
-    # disjoint + exhaustive
-    n_head, n_tail, n_all = head.count(), tail.count(), d.count()
-    assert n_head + n_tail == n_all
