@@ -87,18 +87,14 @@ def connected_components(
     return labels.select("node", F.col("label").alias("component"))
 
 
-def canonical_map(
-    entities: DataFrame, edges: DataFrame, algo: str = "star"
-) -> DataFrame:
+def canonical_map(entities: DataFrame, edges: DataFrame) -> DataFrame:
     """All entities → (entity_id, canonical_id); isolated entities map to self.
 
-    algo="star" (default): large-star/small-star contraction — benched 1.57×
+    Components come from large-star/small-star contraction — benched 1.57×
     faster than pointer-jumping label propagation at 4M edges (the gap grows
     with scale because the star working set contracts each round).
-    algo="jump": the pointer-jumping fixpoint (kept for comparison/tests).
     """
-    fn = connected_components_star if algo == "star" else connected_components
-    cc = fn(edges)
+    cc = connected_components_star(edges)
     ent = entities.select("entity_id").distinct()
     return ent.join(cc, ent.entity_id == cc.node, "left").select(
         "entity_id", F.coalesce("component", "entity_id").alias("canonical_id")

@@ -31,28 +31,19 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kgforge import canon, pipeline
+from kgforge.ops import _util
 from kgforge.tables import load
 
 MIN_TOKEN_LEN = 4
 PREFIX_LEN = 4
 
-# Memoization: every registered pipeline op re-derives the same corpus cuts,
-# and each derive_transcripts used to run a docs.count() Spark job — one
-# extra job per op per invocation (round-1 VERDICT #7). The sf dirs are
-# immutable inputs, so n_docs memoizes per sf_dir for the process lifetime;
-# derived DataFrames memoize per (Spark application, sf_dir) and are
-# persist()ed so a 19-query bench builds transcripts/dictionary once.
+# Every registered pipeline op re-derives the same corpus cuts, and each
+# derive_transcripts used to run a docs.count() Spark job — one extra job
+# per op per invocation (round-1 VERDICT #7). The sf dirs are immutable
+# inputs, so n_docs memoizes per sf_dir for the process lifetime; derived
+# DataFrames are persist()ed session cuts (_util.session_memo), so a
+# 19-query bench builds transcripts/dictionary once.
 _N_DOCS: dict[str, int] = {}
-_MEMO: dict[tuple[str, str, str], DataFrame] = {}
-
-
-def _memo(spark: SparkSession, sf_dir: str, kind: str, build) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir, kind)
-    df = _MEMO.get(key)
-    if df is None:
-        df = build().persist()
-        _MEMO[key] = df
-    return df
 
 
 def n_docs(spark: SparkSession, sf_dir: str) -> int:
@@ -79,10 +70,6 @@ def _count_parquet_rows(sf_dir: str) -> int:
         return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
     except Exception:  # noqa: BLE001 — fall back to a Spark count
         return 0
-
-
-def n_convs_expr(n_docs_col: str = "n_docs") -> str:
-    return f"greatest(20, {n_docs_col} // 8)"
 
 
 _LINKS_PER_DOC: dict[str, float] = {}
@@ -137,7 +124,9 @@ def est_links_per_doc(sf_dir: str, sample_rows: int = 256) -> float:
 
 
 def derive_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _memo(spark, sf_dir, "transcripts", lambda: _derive_transcripts(spark, sf_dir))
+    return _util.session_memo(
+        spark, sf_dir, "transcripts", lambda: _derive_transcripts(spark, sf_dir)
+    )
 
 
 def _derive_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -166,7 +155,7 @@ def _derive_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit("2024-01-01 00:00:00").cast("timestamp")
             + F.make_interval(secs=F.col("doc_id").cast("double") * 37)
         ).alias("ts"),
-    )
+    ).persist()
 
 
 # SQL fragment mirroring derive_transcripts for the DuckDB oracle.
@@ -189,7 +178,9 @@ TRANSCRIPTS_SQL = f"""
 
 def derive_dictionary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct corpus tokens (len ≥ MIN_TOKEN_LEN) as a 1:1 entity lexicon."""
-    return _memo(spark, sf_dir, "dictionary", lambda: _derive_dictionary(spark, sf_dir))
+    return _util.session_memo(
+        spark, sf_dir, "dictionary", lambda: _derive_dictionary(spark, sf_dir)
+    )
 
 
 def _derive_dictionary(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -217,7 +208,7 @@ def _derive_dictionary(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(F.lit("E_"), F.col("surface")).alias("entity_id"),
         F.concat(F.lit("TOK:"), F.col("surface")).alias("curie"),
         F.lit(1.0).alias("prior"),
-    )
+    ).persist()
 
 
 DICTIONARY_SQL = f"""
@@ -234,7 +225,9 @@ DICTIONARY_SQL = f"""
 
 def derive_xref_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Star same-as edges: each entity ↔ min entity of its 4-char-prefix group."""
-    return _memo(spark, sf_dir, "xref_edges", lambda: _derive_xref_edges(spark, sf_dir))
+    return _util.session_memo(
+        spark, sf_dir, "xref_edges", lambda: _derive_xref_edges(spark, sf_dir)
+    )
 
 
 def _derive_xref_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -246,6 +239,7 @@ def _derive_xref_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         d.join(mins, "pfx")
         .where(F.col("entity_id") != F.col("dst"))
         .select(F.col("entity_id").alias("src"), "dst", F.lit("prefix4").alias("source"))
+        .persist()
     )
 
 
@@ -264,14 +258,14 @@ def derive_canonical_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph/pipeline op needs this same map, and canonical_map_auto costs a
     driver union-find pass per call — once per (application, sf_dir) is
     enough."""
-    return _memo(
+    return _util.session_memo(
         spark,
         sf_dir,
         "canonical_map",
         lambda: canon.canonical_map_auto(
             derive_dictionary(spark, sf_dir).select("entity_id"),
             derive_xref_edges(spark, sf_dir),
-        ),
+        ).persist(),
     )
 
 
@@ -287,16 +281,17 @@ def derive_linked(spark: SparkSession, sf_dir: str) -> DataFrame:
     lowercase words, so each mention links exactly once. The matcher's own
     cache is therefore released once this one is loaded, as run_pipeline
     releases it once ``linked`` is written."""
-    key = (spark.sparkContext.applicationId, sf_dir, "linked")
-    linked = _MEMO.get(key)
-    if linked is None:
+
+    def build() -> DataFrame:
         mentions, linked = pipeline.extract_link(
             derive_transcripts(spark, sf_dir),
             derive_dictionary(spark, sf_dir),
             pipeline.NUM_PARTITIONS,
             pipeline.TARGET_ROWS,
         )
-        linked = _MEMO[key] = linked.persist()
+        linked = linked.persist()
         linked.count()  # loads the cache; nothing reads mentions after it
         mentions.unpersist()
-    return linked
+        return linked
+
+    return _util.session_memo(spark, sf_dir, "linked", build)

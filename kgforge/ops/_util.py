@@ -8,6 +8,9 @@ to ``DECIMAL(18,4)`` is lossless-in-intent and makes the sum EXACT and
 identical in both engines; the final cast back to double is then bit-identical.
 
 SQL mirrors are plain strings the DuckDB side uses; keep the two in sync.
+
+``session_memo`` is the one session-scoped memo every shared cut goes
+through.
 """
 
 from __future__ import annotations
@@ -36,18 +39,6 @@ def dsum_sql(expr: str) -> str:
     return f"ROUND(CAST(SUM(CAST({expr} AS DECIMAL(18,4))) AS DOUBLE), 2)"
 
 
-def davg(col: Column | str) -> Column:
-    """Exact-sum average: decimal sum cast to double, divided by count."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.sum(c.cast(DEC)).cast("double") / F.count(c)
-
-
-def davg_sql(expr: str) -> str:
-    return (
-        f"CAST(SUM(CAST({expr} AS DECIMAL(18,4))) AS DOUBLE) / COUNT({expr})"
-    )
-
-
 def dmul(a: Column, b: Column) -> Column:
     """Exact product of two money-like doubles as decimal (for dsum_raw)."""
     return a.cast(DEC) * b.cast(DEC)
@@ -66,15 +57,23 @@ def dmul_sum_sql(a: str, b: str) -> str:
     )
 
 
-def session_memo(memo, spark, sf_dir, build):
-    """Per-(applicationId, sf_dir) DataFrame memo for registered ops whose
-    body ``persist()``s an intermediate cut (ADVICE r04): a long-lived
-    session that invokes such an op repeatedly must reuse the first call's
-    persisted cut instead of stacking one new cached copy per call. Keyed
-    exactly like ``corpus._MEMO`` / ``pipeline_ops._REMAPPED_MEMO`` so a new
-    SparkSession (new applicationId) naturally re-derives."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    got = memo.get(key)
-    if got is None:
-        got = memo[key] = build()
-    return got
+_SESSION_CUTS: dict[tuple[str, str, str], object] = {}
+
+
+def session_memo(spark, sf_dir, name, build):
+    """Build the session cut ``name`` over ``sf_dir`` once per Spark
+    application and return that same object on every later call.
+
+    Registered keys are self-contained, so without this a session that
+    runs many keys re-derives every shared cut (corpus derivations, the
+    linked cut, triples, graph edge sets) once per key, and a key whose
+    body ``persist()``s stacks one cached copy per call (ADVICE r04).
+    sf dirs are immutable inputs and a new SparkSession has a new
+    application id, so an entry never goes stale within its session and
+    a stopped session's entries are never hit again. What ``build()``
+    returns is stored as is: a builder that wants its cut cached
+    persists it itself."""
+    key = (spark.sparkContext.applicationId, sf_dir, name)
+    if key not in _SESSION_CUTS:
+        _SESSION_CUTS[key] = build()
+    return _SESSION_CUTS[key]

@@ -32,8 +32,6 @@ from kgforge.ops.pipeline_ops import _PRELUDE
 from kgforge.registry import register
 from kgforge.tables import load
 
-_SPAN_MEMO: dict[tuple[str, str], DataFrame] = {}
-
 # ------------------------------------------------------------- SFT pairs
 
 
@@ -306,10 +304,10 @@ _SPAN_PAD = 6  # span_no pad: spans-per-doc = tokens/8, bounded well under 1e6
     ),
 )
 def dedup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # span_dedup persists its span cut; memoize per (app, sf_dir) so
-    # repeated invocations reuse it instead of stacking caches (ADVICE r04)
+    # span_dedup persists its span cut; a session cut so repeated
+    # invocations reuse it instead of stacking caches (ADVICE r04)
     return _util.session_memo(
-        _SPAN_MEMO, spark, sf_dir,
+        spark, sf_dir, "span_dedup",
         lambda: span_dedup(load(spark, sf_dir, "documents")),
     )
 

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kgforge import corpus
+from kgforge.ops import text
 from kgforge.ops.pipeline_ops import _PRELUDE
 from kgforge.registry import register
 from kgforge.tables import load
@@ -193,15 +194,13 @@ def _gate_sql() -> str:
     joined on doc_id, so the gate is value-consistent with its inputs by
     construction. Each feature oracle is itself 'WITH t AS (...) SELECT'
     — DuckDB allows a nested WITH inside a CTE body."""
-    from kgforge.ops.text import LANGID_SQL, QUALITY_SQL, REPETITION_SQL
-
     def as_cte(sql: str, name: str) -> str:
         return f"{name} AS ({sql.strip()})"
 
     return f"""
-    WITH {as_cte(QUALITY_SQL, "gq")},
-         {as_cte(LANGID_SQL, "gl")},
-         {as_cte(REPETITION_SQL, "gr")}
+    WITH {as_cte(text.QUALITY_SQL, "gq")},
+         {as_cte(text.LANGID_SQL, "gl")},
+         {as_cte(text.REPETITION_SQL, "gr")}
     SELECT gq.doc_id,
            CASE
              WHEN gl.pred_lang <> 'en' THEN 'langid'
@@ -239,8 +238,6 @@ def _gate_sql() -> str:
     ),
 )
 def filter_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kgforge.ops import text
-
     docs = load(spark, sf_dir, "documents")
     # --- quality features (mirrors text_quality's certified expressions)
     len_ok = F.length("text").between(20, 10000)

@@ -244,17 +244,14 @@ _GRAPH_SQL_PREFIX = (
 )
 
 
-_UND_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-
 def undirected_entity_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct undirected (a < b) entity co-occurrence edges, persisted:
     every analytics op below self-joins this cut, and Catalyst has no
     cross-branch CSE — without the persist the whole extract→link→triples
-    dataflow would re-run once per join branch. Memoized per
-    (applicationId, sf_dir): seven registered graph keys share this cut,
-    so per-call persists would stack seven cached copies of the same
-    edge set in one session (the ADVICE r04 leak class)."""
+    dataflow would re-run once per join branch. A session cut
+    (_util.session_memo): seven registered graph keys share it, so
+    per-call persists would stack seven cached copies of the same edge
+    set in one session (the ADVICE r04 leak class)."""
     from pyspark.sql import functions as F
 
     def build() -> DataFrame:
@@ -271,7 +268,7 @@ def undirected_entity_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
             .persist()
         )
 
-    return _util.session_memo(_UND_MEMO, spark, sf_dir, build)
+    return _util.session_memo(spark, sf_dir, "entity_edges", build)
 
 
 def triangle_counts(und: DataFrame) -> DataFrame:
@@ -434,15 +431,12 @@ _BASKET_CTE = """
 """
 
 
-_COORDER_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-
 def coorder_part_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct undirected (a < b) co-ordered part pairs from lineitem,
-    persisted (the jaccard stages branch over it several times) and
-    memoized per (applicationId, sf_dir): three registered keys (jaccard,
-    kcore, khop) share this cut, so per-call persists would stack cached
-    copies and re-run the lineitem self-join per key (ADVICE r04 class)."""
+    persisted (the jaccard stages branch over it several times) as a
+    session cut (_util.session_memo): three registered keys (jaccard,
+    kcore, khop) share it, so per-call persists would stack cached copies
+    and re-run the lineitem self-join per key (ADVICE r04 class)."""
     from pyspark.sql import functions as F
 
     def build() -> DataFrame:
@@ -474,7 +468,7 @@ def coorder_part_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
             .persist()
         )
 
-    return _util.session_memo(_COORDER_MEMO, spark, sf_dir, build)
+    return _util.session_memo(spark, sf_dir, "coorder_edges", build)
 
 
 @register(

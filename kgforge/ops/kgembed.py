@@ -27,9 +27,6 @@ from kgforge import corpus
 from kgforge.ops import _util, graph, pipeline_ops
 from kgforge.registry import register
 
-_PREDSTATS_MEMO: dict[tuple[str, str], DataFrame] = {}
-_RELPROPS_MEMO: dict[tuple[str, str], DataFrame] = {}
-
 _TRIPLES_PREFIX = (
     pipeline_ops._PRELUDE
     + ",\n"
@@ -176,10 +173,10 @@ def walk_paths(adj: DataFrame, steps: int = WALK_LEN) -> DataFrame:
     ),
 )
 def kg_predstats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # pred_cooccurrence persists its (subj, pred) cut; memoize per
-    # (app, sf_dir) so repeated calls reuse it (ADVICE r04)
+    # pred_cooccurrence persists its (subj, pred) cut; a session cut so
+    # repeated calls reuse it (ADVICE r04)
     return _util.session_memo(
-        _PREDSTATS_MEMO, spark, sf_dir,
+        spark, sf_dir, "pred_cooccurrence",
         lambda: pred_cooccurrence(pipeline_ops.pipe_triples(spark, sf_dir)),
     )
 
@@ -227,10 +224,10 @@ def pred_cooccurrence(tri: DataFrame) -> DataFrame:
     ),
 )
 def kg_relprops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # relation_properties persists the distinct relation set; memoize per
-    # (app, sf_dir) so repeated calls reuse it (ADVICE r04)
+    # relation_properties persists the distinct relation set; a session
+    # cut so repeated calls reuse it (ADVICE r04)
     return _util.session_memo(
-        _RELPROPS_MEMO, spark, sf_dir,
+        spark, sf_dir, "relation_properties",
         lambda: relation_properties(pipeline_ops.pipe_triples(spark, sf_dir)),
     )
 

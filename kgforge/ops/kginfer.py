@@ -50,11 +50,10 @@ from kgforge.tables import load
 KHOP_SEEDS = 24
 KHOP_HOPS = 3
 
-# khop_neighborhoods and preference_pairs persist a cut per call; memoize
-# both keys per (app, sf_dir) so repeated invocations reuse the first
-# call's cut instead of stacking one cached copy per call (ADVICE r05)
-_KHOP_MEMO: dict[tuple[str, str], DataFrame] = {}
-_PREF_MEMO: dict[tuple[str, str], DataFrame] = {}
+# khop_neighborhoods and preference_pairs persist a cut per call; both
+# keys are session cuts (_util.session_memo) so repeated invocations reuse
+# the first call's cut instead of stacking one cached copy per call
+# (ADVICE r05)
 
 
 @register(
@@ -117,7 +116,7 @@ def graph_khop(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return khop_neighborhoods(adj, seeds)
 
-    return _util.session_memo(_KHOP_MEMO, spark, sf_dir, build)
+    return _util.session_memo(spark, sf_dir, "khop", build)
 
 
 def khop_neighborhoods(
@@ -518,7 +517,7 @@ _PAIRS_CTE = """
 )
 def pair_preference(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _util.session_memo(
-        _PREF_MEMO, spark, sf_dir,
+        spark, sf_dir, "preference_pairs",
         lambda: preference_pairs(
             convo.sft_pairs(corpus.derive_transcripts(spark, sf_dir))
         ),

@@ -16,10 +16,13 @@ recomputes their results, not their algorithms.
 
 from __future__ import annotations
 
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kgforge import canon, corpus, pipeline, triples
+from kgforge.io.tableio import Warehouse
 from kgforge.ops import _util
 from kgforge.registry import register
 
@@ -164,14 +167,11 @@ def graph_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     return canon.canonical_map(d.select("entity_id"), edges)
 
 
-# Triple-stage session cuts, memoized per (applicationId, sf_dir) like
-# corpus._MEMO: every graph-analytics key starts from pipe_triples and the
-# fusion/as-of family from remapped_triples, and each registered query is
-# self-contained — without the memos a driver/bench session re-runs the
-# triple dataflow once per key. Both cuts are deterministic per sf_dir and
-# read the session's one linked cut (corpus.derive_linked).
-_TRIPLES_MEMO: dict[tuple[str, str], DataFrame] = {}
-_REMAPPED_MEMO: dict[tuple[str, str], DataFrame] = {}
+# Triple-stage session cuts (_util.session_memo): every graph-analytics
+# key starts from pipe_triples and the fusion/as-of family from
+# remapped_triples, and each registered query is self-contained — without
+# the memo a driver/bench session re-runs the triple dataflow once per key.
+# Both cuts read the session's one linked cut (corpus.derive_linked).
 
 
 def remapped_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -184,7 +184,7 @@ def remapped_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
             raw, corpus.derive_canonical_map(spark, sf_dir)
         ).persist()
 
-    return _util.session_memo(_REMAPPED_MEMO, spark, sf_dir, build)
+    return _util.session_memo(spark, sf_dir, "remapped_triples", build)
 
 
 @register(
@@ -210,7 +210,7 @@ def pipe_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
             two_level=est_linked >= triples.TWO_LEVEL_MIN_ROWS,
         ).persist()
 
-    return _util.session_memo(_TRIPLES_MEMO, spark, sf_dir, build)
+    return _util.session_memo(spark, sf_dir, "triples", build)
 
 
 @register(
@@ -340,10 +340,6 @@ def udf_score_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def scan_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
-    from kgforge.io.tableio import Warehouse
-
     wh = Warehouse(tempfile.mkdtemp(prefix="kgforge_snap_"))
     tr = corpus.derive_transcripts(spark, sf_dir).select(
         "conv_id", "turn_idx", "role", "tool", "text", "ts"
@@ -369,10 +365,6 @@ def scan_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def sink_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
-    from kgforge.io.tableio import Warehouse
-
     wh = Warehouse(tempfile.mkdtemp(prefix="kgforge_merge_"))
     tri = pipe_triples(spark, sf_dir)
     wh.merge(spark, "triples", tri, keys=["subj", "pred", "obj"])
@@ -402,10 +394,6 @@ def sink_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def sink_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
-    from kgforge.io.tableio import Warehouse
-
     wh = Warehouse(tempfile.mkdtemp(prefix="kgforge_compact_"))
     tri = pipe_triples(spark, sf_dir)
     frag = tri.withColumn(
@@ -447,10 +435,6 @@ def sink_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def scan_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
-    from kgforge.io.tableio import Warehouse
-
     wh = Warehouse(tempfile.mkdtemp(prefix="kgforge_cdc_"))
     tr = corpus.derive_transcripts(spark, sf_dir).select(
         "conv_id", "turn_idx", "role", "tool", "text", "ts"
@@ -482,10 +466,6 @@ def scan_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def pipe_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
-    from kgforge.io.tableio import Warehouse
-
     wh = Warehouse(tempfile.mkdtemp(prefix="kgforge_incr_"))
     tr = corpus.derive_transcripts(spark, sf_dir)
     d = corpus.derive_dictionary(spark, sf_dir)

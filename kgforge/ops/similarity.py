@@ -31,6 +31,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kgforge import canon
+from kgforge.ops import _util
 from kgforge.registry import register
 from kgforge.tables import load
 
@@ -45,38 +46,15 @@ QUANT = 1000  # fixed-point scale for embeddings
 _HEX = "0123456789abcdef"
 
 
-# Memoized heavy cuts, keyed like corpus._MEMO: three registered keys
-# (dedup_minhash, dedup_clusters, dedup_ngram_jaccard) build the identical
-# persisted shingle cut, and dedup_clusters re-derives the exact pair set
-# dedup_minhash just produced. sf dirs are immutable and entries are scoped
-# to the live applicationId, so within one driver/bench session each cut
-# materializes once (stale entries from stopped sessions never hit).
-_SHINGLE_MEMO: dict[tuple[str, str], DataFrame] = {}
-_MINHASH_PAIRS_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-
 def _shingle_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Persisted ``(doc_id, sh)`` shingle cut, one per (app, sf_dir)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _SHINGLE_MEMO.get(key)
-    if df is None:
-        df = (
-            load(spark, sf_dir, "documents")
-            .select("doc_id", _shingles(F.col("text")).alias("sh"))
-            .persist()
-        )
-        _SHINGLE_MEMO[key] = df
-    return df
-
-
-def _minhash_pairs_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Persisted verified near-dup pair set, one per (app, sf_dir)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _MINHASH_PAIRS_MEMO.get(key)
-    if df is None:
-        df = minhash_pairs(_shingle_docs(spark, sf_dir)).persist()
-        _MINHASH_PAIRS_MEMO[key] = df
-    return df
+    """Persisted ``(doc_id, sh)`` shingle session cut: dedup_minhash,
+    dedup_clusters and dedup_ngram_jaccard all start from it."""
+    return _util.session_memo(
+        spark, sf_dir, "shingles",
+        lambda: load(spark, sf_dir, "documents")
+        .select("doc_id", _shingles(F.col("text")).alias("sh"))
+        .persist(),
+    )
 
 
 # ---------------------------------------------------------------- shingles
@@ -222,7 +200,11 @@ def minhash_pairs(docs: DataFrame) -> DataFrame:
     ),
 )
 def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _minhash_pairs_memo(spark, sf_dir)
+    # a persisted session cut: dedup_clusters clusters this exact pair set
+    return _util.session_memo(
+        spark, sf_dir, "minhash_pairs",
+        lambda: minhash_pairs(_shingle_docs(spark, sf_dir)).persist(),
+    )
 
 
 @register(
@@ -257,7 +239,7 @@ def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return near_dup_clusters(
-        _shingle_docs(spark, sf_dir), pairs=_minhash_pairs_memo(spark, sf_dir)
+        _shingle_docs(spark, sf_dir), pairs=dedup_minhash(spark, sf_dir)
     )
 
 

@@ -19,10 +19,12 @@ Scale notes: state is O(1) per live conversation (two turns), the exact
 shape GroupState's store handles at 10^9 keys; arriving rows group-shuffle
 once on conv_id (the same single exchange as the batch window). Dead
 conversations are EVICTED (ADVICE r04): each update arms an event-time
-timeout at max(batch event time) + EVICT_DELAY, so once the watermark
-passes a conversation's last turn by EVICT_DELAY its state is removed and
-the live-key set is bounded by conversations active in the last EVICT_DELAY
-window — not by all conversations ever seen. A turn arriving after its
+timeout at max(event time seen for the conversation) + EVICT_DELAY — the
+arm only moves later, so a batch holding only a late turn never pulls it
+earlier — and once the watermark passes a conversation's last turn by
+EVICT_DELAY its state is removed: the live-key set is bounded by
+conversations active in the last EVICT_DELAY window — not by all
+conversations ever seen. A turn arriving after its
 conversation was evicted starts from empty state (it cannot pair with a
 pre-eviction turn) — the deliberate semantic cost of bounded state,
 pytest-pinned in tests/test_streaming.py.
@@ -37,9 +39,10 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-# last-but-one turn (i2, r2, t2) then latest turn (i1, r1, t1); -1/'' = none
+# last-but-one turn (i2, r2, t2) then latest turn (i1, r1, t1); -1/'' = none;
+# arm = the eviction timeout armed so far (epoch ms)
 PAIR_STATE_SCHEMA = (
-    "i2 int, r2 string, t2 string, i1 int, r1 string, t1 string"
+    "i2 int, r2 string, t2 string, i1 int, r1 string, t1 string, arm long"
 )
 PAIR_OUT_SCHEMA = (
     "conv_id string, turn_idx int, prompt_hash string, response_hash string,"
@@ -72,9 +75,9 @@ def _pair_fn(
         yield pd.DataFrame(_EMPTY_OUT)
         return
     if state.exists:
-        i2, r2, t2, i1, r1, t1 = state.get
+        i2, r2, t2, i1, r1, t1, arm = state.get
     else:
-        i2, r2, t2, i1, r1, t1 = -1, "", "", -1, "", ""
+        i2, r2, t2, i1, r1, t1, arm = -1, "", "", -1, "", "", 0
     out: list[tuple] = []
     batch = pd.concat(list(pdfs), ignore_index=True)
     # File order fixes cross-batch arrival order; within the batch, turn
@@ -87,15 +90,16 @@ def _pair_fn(
         elif r2 == "user" and r1 == "tool" and c_r == "assistant":
             out.append((key[0], i2, t2, c_t))
         i2, r2, t2, i1, r1, t1 = i1, r1, t1, c_i, c_r, c_t
-    state.update((i2, r2, t2, i1, r1, t1))
-    # Arm eviction at this batch's max event time + EVICT_DELAY. Spark
-    # requires the timeout timestamp to be strictly after the current
-    # watermark, so clamp for the late-but-accepted edge (a batch whose
-    # turns all trail the watermark by almost the full allowed lateness).
+    # Arm eviction at this batch's max event time + EVICT_DELAY, but never
+    # earlier than the arm already stored: a batch holding only a late turn
+    # must not shorten the conversation's life. Spark requires the timeout
+    # timestamp to be strictly after the current watermark, so clamp for
+    # the late-but-accepted edge (a batch whose turns all trail the
+    # watermark by almost the full allowed lateness).
     last_ms = int(batch["ts"].max().value // 1_000_000)
-    state.setTimeoutTimestamp(
-        max(last_ms + EVICT_DELAY_MS, state.getCurrentWatermarkMs() + 1)
-    )
+    arm = max(arm, last_ms + EVICT_DELAY_MS, state.getCurrentWatermarkMs() + 1)
+    state.update((i2, r2, t2, i1, r1, t1, arm))
+    state.setTimeoutTimestamp(arm)
     yield pd.DataFrame(
         {
             "conv_id": [o[0] for o in out],

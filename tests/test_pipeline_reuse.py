@@ -6,7 +6,8 @@
   head and the sort-merge tail of the link join both read the mentions.
 - Registry session: every key built on mentions or linked mentions reads
   one session cut, so a session runs the matcher once however many such
-  keys it serves.
+  keys it serves. The session store (``_util.session_memo``) builds each
+  (application, sf_dir, name) cut once.
 """
 
 from __future__ import annotations
@@ -120,3 +121,32 @@ def test_session_runs_matcher_once(spark, tmp_path, monkeypatch):
     # transcripts, dictionary, xref edges, canonical map, linked mentions,
     # remapped triples, final triples
     assert added <= 7, added
+
+
+def test_session_memo_builds_once_per_app_sf_dir_and_name(monkeypatch):
+    # no Spark: the store only reads sparkContext.applicationId
+    from types import SimpleNamespace
+
+    from kgforge.ops import _util
+
+    monkeypatch.setattr(_util, "_SESSION_CUTS", {})
+    built = []
+
+    def get(app, sf_dir, name):
+        stub = SimpleNamespace(sparkContext=SimpleNamespace(applicationId=app))
+
+        def build():
+            built.append((app, sf_dir, name))
+            return object()
+
+        return _util.session_memo(stub, sf_dir, name, build)
+
+    first = get("app-1", "/sf", "linked")
+    assert get("app-1", "/sf", "linked") is first
+    assert len(built) == 1
+    others = [("app-2", "/sf", "linked"), ("app-1", "/sf2", "linked"),
+              ("app-1", "/sf", "triples")]
+    for key in others:
+        assert get(*key) is not first
+        assert get(*key) is get(*key)
+    assert built == [("app-1", "/sf", "linked"), *others]

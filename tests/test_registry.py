@@ -111,7 +111,8 @@ def test_fingerprint_walk_reaches_the_shared_stages():
     fixpoints change. A function-local ``from kgforge import ...`` hides the
     module from the static walk, so this pins the path through
     corpus.derive_linked / derive_canonical_map (and similarity's
-    near_dup_clusters) down to the code that does the work."""
+    near_dup_clusters, and filter_gate's language scorer in text) down to
+    the code that does the work."""
     from kgforge import certify
 
     ops = registry.all_ops()
@@ -126,3 +127,5 @@ def test_fingerprint_walk_reaches_the_shared_stages():
     for key in ("graph_comp_sizes", "dedup_clusters"):
         reached, _ = certify._walk(ops[key].fn)
         assert "kgforge.canon.connected_components_star" in reached, key
+    reached, _ = certify._walk(ops["filter_gate"].fn)
+    assert "kgforge.ops.text._lang_score_spark" in reached

@@ -403,6 +403,58 @@ def test_streaming_sft_state_evicted_after_watermark(spark):
     assert got[0].conv_id == "b"
 
 
+def test_streaming_sft_late_turn_keeps_eviction_arm(spark):
+    """A micro-batch holding only a late but accepted turn must not pull
+    its conversation's eviction earlier (ADVICE r05 #3). Replay order (one
+    row per micro-batch, watermark delay 1 h, EVICT_DELAY 2 h):
+
+      batch0  conv a, user turn, ts 10:00  -> armed at 12:00
+      batch1  conv a, tool turn, ts 09:30  -> late (watermark 09:00) but
+              accepted; arming from this batch alone would give 11:30
+      batch2  conv b, user turn, ts 12:40  -> watermark advances to 11:40
+      batch3  conv b, assistant, ts 12:42  -> conv a has no data; 11:40
+              passes an 11:30 arm but not the 12:00 one, so a stays live
+      batch4  conv a, assistant, ts 12:43  -> user->tool->assistant pair
+
+    Both conversations' pairs must come out, as in batch pair_sft."""
+    from kgforge.ops import convo
+    from kgforge.streaming import replay, sft
+
+    tr = spark.createDataFrame(
+        [
+            (0, "a", 0, "user", "none", "question before a late tool turn"),
+            (1, "a", 1, "tool", "search", "late tool output"),
+            (2, "b", 0, "user", "none", "other question"),
+            (3, "b", 1, "assistant", "none", "other answer"),
+            (4, "a", 2, "assistant", "none", "answer after the late turn"),
+        ],
+        "seq int, conv_id string, turn_idx int, role string,"
+        " tool string, text string",
+    ).withColumn(
+        "ts",
+        F.expr(
+            "timestamp '2024-01-01 00:00:00'"
+            " + make_interval(0, 0, 0, 0, 0, 0,"
+            "   CASE seq WHEN 0 THEN 36000 WHEN 1 THEN 34200"
+            "            WHEN 2 THEN 45600 WHEN 3 THEN 45720 ELSE 45780 END)"
+        ),
+    )
+    cols = [
+        "conv_id", "turn_idx", "prompt_hash", "response_hash",
+        "prompt_tokens", "response_tokens",
+    ]
+    want_rows = _rows(convo.sft_pairs(tr.drop("seq")), cols)
+    assert [r[0] for r in want_rows] == ["a", "b"]
+
+    stream = replay.replay_stream(
+        spark, tr, ["seq"], n_files=5, prefix="kgforge_sft_late_"
+    ).drop("seq")
+    got = jobs.run_available_now(
+        sft.sft_pairs_stream(stream), "append", "sft_late_arm_test"
+    )
+    assert _rows(got, cols) == want_rows
+
+
 def test_streaming_asof_maintenance_equals_batch(spark):
     """The stateful as-of maintainer must converge to the batch
     latest-wins answer even when winners are OVERTURNED across
