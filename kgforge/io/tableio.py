@@ -31,6 +31,7 @@ import shutil
 import time
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 class Warehouse:
@@ -131,10 +132,20 @@ class Warehouse:
 
     # -- read -------------------------------------------------------------
     def read(self, spark: SparkSession, table: str, snapshot: str | None = None) -> DataFrame:
+        """The snapshot as a DataFrame. An unpartitioned snapshot written by
+        ``write_snapshot`` is read with the schema its manifest recorded, so
+        building the DataFrame starts no Spark job (inferring the schema
+        runs one to read a footer; a partitioned snapshot still lists its
+        directories, and discovers the partition column's type from them)."""
         snap = snapshot or self.latest_snapshot(table)
         if snap is None:
             raise FileNotFoundError(f"table {table!r} has no snapshot in {self.root}")
-        return spark.read.parquet(os.path.join(self._tdir(table), snap))
+        path = os.path.join(self._tdir(table), snap)
+        meta = self.snapshot_meta(table, snap)
+        if meta.get("schema_json") and not meta.get("partition_by"):
+            schema = StructType.fromJson(json.loads(meta["schema_json"]))
+            return spark.read.schema(schema).parquet(path)
+        return spark.read.parquet(path)
 
     def changes(
         self,
@@ -231,6 +242,7 @@ class Warehouse:
             "parent": self.latest_snapshot(table),
             "rows": n_rows,
             "schema": df.schema.simpleString(),
+            "schema_json": df.schema.json(),
             "committed_at": time.time(),
             "partition_by": partition_by or [],
             **(meta or {}),
@@ -275,6 +287,16 @@ class Warehouse:
         full-table anti-join — otherwise an incremental batch re-emitting an
         existing key with a different partition value would silently insert a
         duplicate (regression-tested in tests/test_tableio.py).
+
+        WHEN the scoped path pays: with P hash partitions of the keys, a
+        batch of d new rows leaves about P·e^(−d/P) partitions untouched,
+        and every partition is touched once d reaches about P·ln P (the
+        coupon-collector bound: 266 rows for P = 64). A batch larger than
+        that gets a full rewrite plus a probe job and P directories to
+        write and list again on every read. So partition a table only when
+        its batches stay well below P·ln P rows. ``pipeline.merge_triples``
+        writes one unpartitioned file set: its batches reach that size (a
+        10% delta of perfbench's corpus adds about 2,000 triples).
 
         ``source_unique=True`` declares new_df already unique on ``keys``
         (e.g. the output of an aggregation grouped by them) and skips the
@@ -644,25 +666,33 @@ class Warehouse:
         os.replace(tmp, self._latest_file(table))
         return snap
 
+    def read_local(self, table: str):
+        """The latest snapshot of a SMALL unpartitioned table as a pandas
+        DataFrame, read on the driver with pyarrow — zero Spark jobs."""
+        import glob
+
+        import pandas as pd
+        import pyarrow.parquet as pq
+
+        snap = self.latest_snapshot(table)
+        files = glob.glob(os.path.join(self._tdir(table), snap, "*.parquet"))
+        return pd.concat(
+            [pq.read_table(f).to_pandas() for f in files], ignore_index=True
+        )
+
     def merge_local(self, table: str, pdf, keys: list[str]) -> str:
         """Driver-side MERGE for SMALL tables (checkpoint/metrics rows):
         pyarrow read-modify-write, zero Spark jobs, same snapshot layout so
         Spark reads it like any other table. Tables here are O(stages ×
         lineage_parts) rows — launching a distributed job per checkpoint
         write costs more than the data."""
-        import glob
-
         import pandas as pd
         import pyarrow as pa
         import pyarrow.parquet as pq
 
         pdf = pdf.drop_duplicates(subset=keys)
         if self.exists(table):
-            snap = self.latest_snapshot(table)
-            files = glob.glob(os.path.join(self._tdir(table), snap, "*.parquet"))
-            existing = pd.concat(
-                [pq.read_table(f).to_pandas() for f in files], ignore_index=True
-            )
+            existing = self.read_local(table)
             mask = ~pdf.set_index(keys).index.isin(existing.set_index(keys).index)
             merged = pd.concat([existing, pdf[mask.tolist()]], ignore_index=True)
         else:

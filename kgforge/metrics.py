@@ -33,10 +33,11 @@ def with_lineage_part_of(df: DataFrame, cols: list[str], n: int = N_LINEAGE_PART
     """lineage_part derived from the given columns. Use the table's MERGE
     keys for any table that gets partition-scoped merges: the scoped path is
     only sound when the partition column is a function of the merge keys
-    (kgforge/io/tableio.py merge docstring) — e.g. the triples table
-    partitions on hash(subj, pred, obj), NOT on the provenance conv_id, so a
+    (kgforge/io/tableio.py merge docstring) — e.g. a triples table
+    partitioned on hash(subj, pred, obj), NOT on the provenance conv_id, so a
     re-emitted triple with a different first-emission conv_id still lands in
-    (and is anti-joined against) the same partition."""
+    (and is anti-joined against) the same partition. pipeline.merge_triples
+    keeps this column but writes the table unpartitioned."""
     return df.withColumn(
         "lineage_part", F.pmod(F.xxhash64(*cols), F.lit(n)).cast("int")
     )
@@ -48,7 +49,7 @@ def record_stage_cached(
     """Per-lineage-part counters via ONE aggregation over an already-cached
     DataFrame, landed driver-side with a pyarrow merge (no Spark write job).
     Use when the stage output is persisted in memory; use
-    record_stage_from_files when it's on disk partitioned by lineage_part."""
+    record_stage_from_files when it has just been written to disk."""
     import pandas as pd
 
     counts = (
@@ -71,10 +72,11 @@ def record_stage_from_files(
     wh: Warehouse, table: str, stage: str, run_id: str
 ) -> None:
     """Per-lineage-part counters from the snapshot's parquet FOOTERS — zero
-    Spark jobs. Requires the snapshot to be partitioned by lineage_part
-    (partition-aligned writes guarantee one dir per part). A job-based
-    aggregation of a table we just wrote would re-scan it; at 10^12 turns the
-    metadata already knows the answer."""
+    Spark jobs. A snapshot partitioned by lineage_part gets one row per
+    directory (partition-aligned writes guarantee one dir per part); an
+    unpartitioned one gets a single row, ``lineage_part = -1``, counted from
+    its manifest. A job-based aggregation of a table we just wrote would
+    re-scan it; at 10^12 turns the metadata already knows the answer."""
     import glob
 
     import pandas as pd
@@ -90,6 +92,8 @@ def record_stage_from_files(
             for f in glob.glob(os.path.join(part_dir, "*.parquet"))
         )
         counts[part] = counts.get(part, 0) + n
+    if not counts:
+        counts[-1] = wh.rows(table, snap)
     now_ms = int(time.time() * 1000)
     pdf = pd.DataFrame(
         {
@@ -105,19 +109,20 @@ def record_stage_from_files(
 
 
 def done_parts(wh: Warehouse, spark: SparkSession, stage: str, run_id: str) -> DataFrame | None:
-    """lineage_parts already completed for (run_id, stage), or None."""
+    """lineage_parts already completed for (run_id, stage), or None when
+    there are none. Decided on the driver from the checkpoint table's
+    parquet (written by merge_local), so a run starts no Spark job to learn
+    whether it is resuming."""
     if not wh.exists(CHECKPOINT_TABLE):
         return None
-    cp = wh.read(spark, CHECKPOINT_TABLE)
-    return (
-        cp.where(
-            (F.col("run_id") == run_id)
-            & (F.col("stage") == stage)
-            & (F.col("status") == "done")
-        )
-        .select("lineage_part")
-        .distinct()
-    )
+    cp = wh.read_local(CHECKPOINT_TABLE)
+    parts = cp.loc[
+        (cp["run_id"] == run_id) & (cp["stage"] == stage) & (cp["status"] == "done"),
+        "lineage_part",
+    ].unique()
+    if len(parts) == 0:
+        return None
+    return spark.createDataFrame([(int(p),) for p in parts], "lineage_part int")
 
 
 def filter_resume(df_with_lineage: DataFrame, done: DataFrame | None) -> DataFrame:

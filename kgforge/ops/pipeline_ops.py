@@ -449,20 +449,21 @@ def scan_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Full oracle: incremental maintenance == full rebuild, on the batch-
     # order-independent projection. The corpus is split into two
     # conversation-DISJOINT batches; each runs the real extract → link →
-    # remap → dedup stages and MERGEs into the same partition-scoped
-    # warehouse table. Because every triple's derivation is conversation-
-    # local, the union of per-batch triple sets equals the full-corpus set
-    # on (subj, pred, obj, confidence) — only the first-emission provenance
-    # (conv_id, turn_idx) is batch-order dependent, so it is projected out.
-    # This is the driver-checked proof that the partition-scoped MERGE path
-    # (lineage_part = f(merge keys), tableio.py) maintains the KG
-    # incrementally without a full rebuild.
+    # remap → dedup stages and MERGEs into the same warehouse table
+    # (pipeline.merge_triples: insert-if-absent on (subj, pred, obj), one
+    # unpartitioned snapshot per merge). Because every triple's derivation
+    # is conversation-local, the union of per-batch triple sets equals the
+    # full-corpus set on (subj, pred, obj, confidence) — only the first-
+    # emission provenance (conv_id, turn_idx) is batch-order dependent, so
+    # it is projected out. This is the oracle-checked proof that the MERGE
+    # maintains the KG incrementally: the second batch adds only the
+    # triples the first one lacks, without re-deriving the first.
     sql=_PRELUDE + ",\n" + _MENTIONS_CTE + ",\n" + _LINKED_CTE + ",\n" + _TRIPLES_CTE
     + "\nSELECT subj, pred, obj, confidence FROM final_triples",
     doc=(
         "Incremental KG maintenance: two conversation-disjoint transcript "
-        "batches merged successively through the partition-scoped MERGE "
-        "sink equal one full rebuild (batch-order-independent projection)."
+        "batches merged successively through the insert-if-absent triples "
+        "MERGE equal one full rebuild (batch-order-independent projection)."
     ),
 )
 def pipe_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
