@@ -204,10 +204,9 @@ class Warehouse:
         """Commit df as a new snapshot and swap the LATEST pointer atomically.
 
         ``meta`` keys ride the manifest and commit in the SAME atomic
-        pointer swap as the data — the mechanism exactly-once consumers use
-        to record their progress marker (e.g. streaming graph maintenance
-        stores applied_batch_id so an at-least-once foreachBatch replay is
-        a no-op).
+        pointer swap as the data (``compact`` records ``compacted_from``
+        this way), so a progress marker stored there can never disagree
+        with the data it describes.
 
         ``align=False`` skips the pre-write repartition on the partition
         columns, writing one file per (task, partition value) — the
@@ -247,9 +246,15 @@ class Warehouse:
             "partition_by": partition_by or [],
             **(meta or {}),
         }
-        with open(os.path.join(tdir, f"{snap}.manifest.json"), "w") as f:
+        return self._commit(table, manifest)
+
+    def _commit(self, table: str, manifest: dict) -> str:
+        """Write the snapshot's manifest, then swap the LATEST pointer to it
+        atomically (os.replace) — the commit point: until the swap, readers
+        see the previous snapshot and the new data dir is invisible."""
+        snap = manifest["snapshot_id"]
+        with open(os.path.join(self._tdir(table), f"{snap}.manifest.json"), "w") as f:
             json.dump(manifest, f)
-        # atomic pointer swap — the "commit"
         tmp = self._latest_file(table) + ".tmp"
         with open(tmp, "w") as f:
             f.write(snap)
@@ -268,260 +273,39 @@ class Warehouse:
     ) -> str:
         """MERGE INTO (insert-if-absent on keys). Idempotent by construction.
 
-        When the target is partitioned (single partition column matching the
-        existing snapshot's layout), the merge is PARTITION-SCOPED: only the
-        partitions receiving rows are anti-joined and rewritten; untouched
-        partition directories are hard-linked into the new snapshot without
-        reading or rewriting a byte. A full-table copy-on-write (round-1
-        behavior) would rewrite 100 TB per incremental batch at scale.
+        The parquet emulation anti-joins the WHOLE existing table on ``keys``
+        and writes ``existing ⟕anti new ∪ new`` as a new snapshot, so every
+        merge rewrites the table. Rewriting only the partitions a batch
+        touches does not pay here: with P hash partitions, a batch of d rows
+        touches about P·(1 − e^(−d/P)) of them (all of them once d nears
+        P·ln P, 266 rows for P = 64), and a scoped rewrite costs a probe job
+        plus P directories to write and to list on every read. The
+        fmt="iceberg" path hands the merge to MERGE INTO, which prunes files
+        itself.
 
-        SOUNDNESS of the scoped path: the merge contract is insert-if-absent
-        on ``keys`` over the WHOLE table, but the scoped anti-join only sees
-        the affected partitions — that is equivalent iff the partition column
-        is a FUNCTION of the merge keys (then a row with the same keys can
-        only ever live in the one partition its keys map to). The scoped path
-        therefore engages only when ``partition_by[0] in keys``, or when the
-        caller declares the functional dependency with
-        ``part_determined_by_keys=True`` (e.g. ``lineage_part =
-        pmod(xxhash64(*keys), n)``). Any other layout falls back to the
-        full-table anti-join — otherwise an incremental batch re-emitting an
-        existing key with a different partition value would silently insert a
-        duplicate (regression-tested in tests/test_tableio.py).
-
-        WHEN the scoped path pays: with P hash partitions of the keys, a
-        batch of d new rows leaves about P·e^(−d/P) partitions untouched,
-        and every partition is touched once d reaches about P·ln P (the
-        coupon-collector bound: 266 rows for P = 64). A batch larger than
-        that gets a full rewrite plus a probe job and P directories to
-        write and list again on every read. So partition a table only when
-        its batches stay well below P·ln P rows. ``pipeline.merge_triples``
-        writes one unpartitioned file set: its batches reach that size (a
-        10% delta of perfbench's corpus adds about 2,000 triples).
+        ``partition_by`` sets the snapshot's directory layout (and the
+        Iceberg table's PARTITIONED BY); it does not change what is merged.
 
         ``source_unique=True`` declares new_df already unique on ``keys``
         (e.g. the output of an aggregation grouped by them) and skips the
         defensive dropDuplicates — at scale that is one full shuffle of the
         entire source avoided in the sink.
+
+        ``part_determined_by_keys`` is accepted and ignored. It goes with
+        its last caller, the benchmark's traced copy of the pipeline
+        (``perfbench/layers.py`` ``traced_pipeline``), as ``hot_threshold``
+        does.
         """
+        del part_determined_by_keys  # see docstring
         if self.fmt == "iceberg":
             return self._iceberg_merge(spark, table, new_df, keys, partition_by)
-        dedup = (lambda df: df) if source_unique else (
-            lambda df: df.dropDuplicates(keys)
-        )
+        if not source_unique:
+            new_df = new_df.dropDuplicates(keys)
         if not self.exists(table):
-            return self.write_snapshot(table, dedup(new_df), partition_by)
-        scoped_sound = partition_by is not None and len(partition_by) == 1 and (
-            partition_by[0] in keys or part_determined_by_keys
-        )
-        if scoped_sound:
-            prev = [m for m in self.snapshots(table)
-                    if m["snapshot_id"] == self.latest_snapshot(table)]
-            if prev and prev[0].get("partition_by") == partition_by:
-                # The scoped path evaluates new_df twice (affected-partition
-                # probe, then the anti-join) — persist across both uses
-                # unless the caller already did.
-                from pyspark import StorageLevel
-
-                we_persisted = new_df.storageLevel == StorageLevel(
-                    False, False, False, False
-                )
-                if we_persisted:
-                    new_df = new_df.persist()
-                try:
-                    scoped = self._merge_partition_scoped(
-                        spark, table, new_df, keys, partition_by[0],
-                        source_unique=source_unique,
-                    )
-                finally:
-                    if we_persisted:
-                        new_df.unpersist()
-                if scoped is not None:
-                    return scoped
+            return self.write_snapshot(table, new_df, partition_by)
         existing = self.read(spark, table)
-        inserts = dedup(new_df).join(
-            existing.select(*keys), keys, "left_anti"
-        )
-        merged = existing.unionByName(inserts)
-        return self.write_snapshot(table, merged, partition_by)
-
-    def _merge_partition_scoped(
-        self,
-        spark: SparkSession,
-        table: str,
-        new_df: DataFrame,
-        keys: list[str],
-        part_col: str,
-        source_unique: bool = False,
-    ) -> str | None:
-        """Rewrite only the partitions present in new_df; hard-link the rest.
-
-        Only called when the partition column is a function of the merge keys
-        (see ``merge``). Returns None (caller falls back to full rewrite)
-        when a partition value is NULL or its Hive directory encoding could
-        differ from ``str(value)``.
-        """
-        import glob
-        import re
-
-        from pyspark.sql import functions as F
-
-        affected = [r[0] for r in new_df.select(part_col).distinct().collect()]
-        if self._scoped_guard(affected) is None:
-            return None
-
-        existing_aff = self.read(spark, table).where(
-            F.col(part_col).isin(affected)
-        )  # partition-pruned scan: only affected directories are read
-        src = new_df if source_unique else new_df.dropDuplicates(keys)
-        inserts = src.join(
-            existing_aff.select(*keys), keys, "left_anti"
-        )
-        merged_aff = existing_aff.unionByName(inserts)
-        return self._commit_partition_rewrite(
-            table, merged_aff, part_col, affected,
-            schema_str=new_df.schema.simpleString(),
-            meta={"merge_scope": sorted(str(v) for v in affected)},
-        )
-
-    @staticmethod
-    def _scoped_guard(affected: list) -> list | None:
-        """None when a partition value can't take the scoped path: NULL, or
-        a value whose Hive directory encoding could differ from str(value)
-        (Spark percent-escapes special characters, so a mismatch would
-        leave the stale old partition dir hard-linked ALONGSIDE the
-        rewritten one — duplicated rows). Integers and simple alphanumeric
-        strings are identity-encoded."""
-        import re
-
-        if any(v is None for v in affected):
-            return None
-        for v in affected:
-            if not isinstance(v, int) and not (
-                isinstance(v, str) and re.fullmatch(r"[0-9A-Za-z._-]+", v)
-            ):
-                return None
-        return affected
-
-    def _commit_partition_rewrite(
-        self,
-        table: str,
-        merged_aff: DataFrame,
-        part_col: str,
-        affected: list,
-        schema_str: str,
-        meta: dict | None = None,
-    ) -> str | None:
-        """Write ``merged_aff`` as the new content of the ``affected``
-        partitions, hard-link every other partition from the current
-        snapshot, and commit atomically. Shared tail of the scoped MERGE
-        and the scoped replace/upsert paths. Returns None (caller falls
-        back to a full rewrite) when Spark's written directory names don't
-        match the predicted encoding."""
-        import glob
-
-        from pyspark.sql import functions as F
-
-        affected_dirs = {f"{part_col}={v}" for v in affected}
-        old_snap = self.latest_snapshot(table)
-        old_dir = os.path.join(self._tdir(table), old_snap)
-        old_part_dirs = [
-            e for e in os.listdir(old_dir)
-            if os.path.isdir(os.path.join(old_dir, e)) and e.startswith(f"{part_col}=")
-        ]
-
-        tdir = self._tdir(table)
-        snap = self._next_snapshot_id(table)
-        data_dir = os.path.join(tdir, snap)
-        merged_aff.repartition(F.col(part_col)).write.mode(
-            "overwrite"
-        ).partitionBy(part_col).parquet(data_dir)
-
-        # Verify against the directories Spark ACTUALLY wrote: every written
-        # partition dir must be one we predicted (same encoding), else the
-        # hard-link pass below could duplicate a partition under two names.
-        # Abandoning the uncommitted data dir is safe — the LATEST pointer
-        # has not been swapped, so readers never see it.
-        written = {
-            e for e in os.listdir(data_dir)
-            if os.path.isdir(os.path.join(data_dir, e)) and "=" in e
-        }
-        if not written <= affected_dirs:
-            shutil.rmtree(data_dir, ignore_errors=True)
-            return None
-
-        # Carry untouched partitions into the new snapshot as hard links —
-        # same inode, zero data movement, byte-identical (asserted in
-        # tests/test_tableio.py).
-        for entry in old_part_dirs:
-            if entry in affected_dirs:
-                continue
-            src, dst = os.path.join(old_dir, entry), os.path.join(data_dir, entry)
-            os.makedirs(dst, exist_ok=True)
-            for fn in os.listdir(src):
-                if fn.endswith(".parquet"):
-                    os.link(os.path.join(src, fn), os.path.join(dst, fn))
-
-        # Row count from parquet footers — metadata-only, no data scan.
-        import pyarrow.parquet as pq
-
-        n_rows = sum(
-            pq.ParquetFile(f).metadata.num_rows
-            for f in glob.glob(os.path.join(data_dir, "**", "*.parquet"), recursive=True)
-        )
-        manifest = {
-            "snapshot_id": snap,
-            "parent": old_snap,
-            "rows": n_rows,
-            "schema": schema_str,
-            "committed_at": time.time(),
-            "partition_by": [part_col],
-            **(meta or {}),
-        }
-        with open(os.path.join(tdir, f"{snap}.manifest.json"), "w") as f:
-            json.dump(manifest, f)
-        tmp = self._latest_file(table) + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(snap)
-        os.replace(tmp, self._latest_file(table))
-        return snap
-
-    def replace_partitions_scoped(
-        self,
-        spark: SparkSession,
-        table: str,
-        content: DataFrame,
-        part_col: str,
-        affected: list,
-        meta: dict | None = None,
-    ) -> str:
-        """REPLACE the ``affected`` partitions' content with ``content``
-        (which must contain only rows whose ``part_col`` is in ``affected``)
-        and hard-link every other partition — the general scoped-write
-        primitive under stateful maintenance (upserts AND deletes: a key
-        absent from ``content`` but present in the old partition is gone).
-
-        Exactly-once consumers pass their progress marker via ``meta``: it
-        rides the manifest and commits in the SAME atomic pointer swap as
-        the data (the write_snapshot contract). Falls back to a FULL
-        rewrite preserving semantics when the scoped guards decline
-        (non-identity-encoded partition values) — correctness never depends
-        on the scoped path engaging."""
-        from pyspark.sql import functions as F
-
-        if self.exists(table) and self._scoped_guard(affected) is not None:
-            snap = self._commit_partition_rewrite(
-                table, content, part_col, affected,
-                schema_str=content.schema.simpleString(),
-                meta={**(meta or {}), "replace_scope": sorted(str(v) for v in affected)},
-            )
-            if snap is not None:
-                return snap
-        if self.exists(table):
-            untouched = self.read(spark, table).where(
-                ~F.col(part_col).isin(affected)
-            )
-            content = untouched.unionByName(content)
-        return self.write_snapshot(table, content, [part_col], meta=meta)
+        inserts = new_df.join(existing.select(*keys), keys, "left_anti")
+        return self.write_snapshot(table, existing.unionByName(inserts), partition_by)
 
     def iceberg_rewrite_stmt(self, table: str) -> str:
         """The rewrite_data_files call the fmt="iceberg" compact path
@@ -551,8 +335,8 @@ class Warehouse:
         problem). Compaction must move each affected byte exactly once:
         affected partitions are read in ONE job restricted to their
         directories and rewritten aligned to the partition column; untouched
-        partitions are hard-linked — zero data movement, same mechanism as
-        the partition-scoped MERGE. The manifest inherits the old row count
+        partitions are hard-linked into the new snapshot — zero data
+        movement. The manifest inherits the old row count and schema
         (content-identical by construction; recounting would double every
         compaction's cost) and records ``compacted_from``.
         """
@@ -658,13 +442,10 @@ class Warehouse:
             "partition_by": part_by,
             "compacted_from": old_snap,
         }
-        with open(os.path.join(tdir, f"{snap}.manifest.json"), "w") as f:
-            json.dump(manifest, f)
-        tmp = self._latest_file(table) + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(snap)
-        os.replace(tmp, self._latest_file(table))
-        return snap
+        # the schema ``read`` builds the DataFrame from without a job
+        if "schema_json" in meta:
+            manifest["schema_json"] = meta["schema_json"]
+        return self._commit(table, manifest)
 
     def read_local(self, table: str):
         """The latest snapshot of a SMALL unpartitioned table as a pandas
@@ -712,13 +493,7 @@ class Warehouse:
             "committed_at": time.time(),
             "partition_by": [],
         }
-        with open(os.path.join(tdir, f"{snap}.manifest.json"), "w") as f:
-            json.dump(manifest, f)
-        tmp = self._latest_file(table) + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(snap)
-        os.replace(tmp, self._latest_file(table))
-        return snap
+        return self._commit(table, manifest)
 
     def drop(self, table: str) -> None:
         shutil.rmtree(self._tdir(table), ignore_errors=True)

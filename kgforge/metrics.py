@@ -30,14 +30,11 @@ def with_lineage_part(df: DataFrame, key: str = "conv_id", n: int = N_LINEAGE_PA
 
 
 def with_lineage_part_of(df: DataFrame, cols: list[str], n: int = N_LINEAGE_PARTS) -> DataFrame:
-    """lineage_part derived from the given columns. Use the table's MERGE
-    keys for any table that gets partition-scoped merges: the scoped path is
-    only sound when the partition column is a function of the merge keys
-    (kgforge/io/tableio.py merge docstring) — e.g. a triples table
-    partitioned on hash(subj, pred, obj), NOT on the provenance conv_id, so a
-    re-emitted triple with a different first-emission conv_id still lands in
-    (and is anti-joined against) the same partition. pipeline.merge_triples
-    keeps this column but writes the table unpartitioned."""
+    """lineage_part derived from the given columns — for triples, the MERGE
+    keys (subj, pred, obj) rather than the provenance conv_id, so a
+    re-emitted triple with a different first-emission conv_id keeps its
+    lineage part. pipeline.merge_triples keeps this column but writes the
+    table unpartitioned."""
     return df.withColumn(
         "lineage_part", F.pmod(F.xxhash64(*cols), F.lit(n)).cast("int")
     )

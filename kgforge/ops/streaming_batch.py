@@ -1,9 +1,6 @@
-"""Batch mirrors of the Structured Streaming surface (SURVEY.md §2.B
-streaming pane): tumbling / sliding / session windows over the `events`
-stream table, expressed with the SAME window expressions the streaming jobs
-use (kgforge/streaming/jobs.py) — so the DuckDB oracle validates the window
-semantics once, and the streaming tests only need to show that readStream +
-trigger(availableNow) reproduces the batch result.
+"""Batch windows over the `events` stream table (SURVEY.md §2.B streaming
+pane): tumbling / sliding / session windows, each checked against its
+DuckDB oracle.
 
 Money-like doubles go through the decimal-exact sum helper so aggregation
 order can't break cross-engine equality (kgforge/ops/_util.py).

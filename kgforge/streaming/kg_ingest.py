@@ -6,9 +6,11 @@ span micro-batches, so they finalize after ingestion; at production scale
 this is the periodic compaction pass over a continuously-ingested linked
 table).
 
-Idempotence: mention keys (conv_id, turn_idx, m_idx) are deterministic, so a
-replayed micro-batch (failure/retry) merges to a no-op — the streaming
-equivalent of the bot's create-or-update writes.
+Each micro-batch MERGEs into ``linked`` as one unpartitioned snapshot (the
+whole table is anti-joined and rewritten, like every parquet-warehouse
+merge). Idempotence: mention keys (conv_id, turn_idx, m_idx) are
+deterministic, so a replayed micro-batch (failure/retry) merges to a no-op —
+the streaming equivalent of the bot's create-or-update writes.
 """
 
 from __future__ import annotations
@@ -56,16 +58,13 @@ def ingest(
         mentions, linked = pipeline.extract_link(
             bdf, dictionary, bdf.rdd.getNumPartitions(), pipeline.TARGET_ROWS
         )
-        # Partitioned by lineage_part = f(conv_id) with conv_id a merge key,
-        # so micro-batches 2..N take the PARTITION-SCOPED merge: only the
-        # lineage parts this batch's conversations hash into are anti-joined
-        # and rewritten; the rest of the linked table is hard-linked forward
-        # (inode-asserted in tests/test_streaming.py). At scale that makes
-        # per-micro-batch sink cost proportional to the batch, not the table.
+        # one unpartitioned file set per micro-batch: a batch's conversations
+        # hash into most of the 64 lineage parts, so rewriting only the parts
+        # it touches saved nothing (tableio ``merge`` docstring). The
+        # lineage_part column stays, as in run_pipeline's linked table.
         wh.merge(
             bdf.sparkSession, "linked", metrics.with_lineage_part(linked),
             keys=["conv_id", "turn_idx", "m_idx"],
-            partition_by=["lineage_part"], part_determined_by_keys=True,
         )
         mentions.unpersist()
 

@@ -5,8 +5,8 @@ micro-batch order) follows ``order_cols``.
 Mechanics every caller relies on: range partitioning makes part order =
 sort order; FileStreamSource orders files by modification time, and a
 single write commit gives every part the same mtime, so ascending mtimes
-are stamped in part order. One implementation — the events replay, the
-transcript ingestion stream, and the edge-CDC stream all delegate here.
+are stamped in part order. The transcript ingestion stream
+(kg_ingest.transcripts_stream) delegates here.
 """
 
 from __future__ import annotations

@@ -132,42 +132,3 @@ def test_dedup_clusters_matches_union_find(spark):
     got = {r.doc_id: (r.cluster_id, r.cluster_size) for r in
            near_dup_clusters(docs).collect()}
     assert got == want
-
-
-# ------------------------------------------------------------------ incremental
-def test_pipe_incremental_scoped_merge_engaged(spark, tmp_path):
-    """The second batch's merge must take the partition-scoped path: at
-    least one lineage_part directory of the batch-1 snapshot is hard-linked
-    (same inode) into the batch-2 snapshot instead of rewritten."""
-    import os
-
-    from kgforge import metrics
-    from kgforge.io.tableio import Warehouse
-
-    wh = Warehouse(str(tmp_path / "wh"))
-    rows = [("E_a", "co_occurs", "E_b", "c1", 0, 1.0),
-            ("E_c", "co_occurs", "E_d", "c2", 0, 1.0)]
-    cols = "subj string, pred string, obj string, conv_id string, turn_idx int, confidence double"
-    b1 = metrics.with_lineage_part_of(
-        spark.createDataFrame([rows[0]], cols), ["subj", "pred", "obj"])
-    b2 = metrics.with_lineage_part_of(
-        spark.createDataFrame([rows[1]], cols), ["subj", "pred", "obj"])
-    assert b1.first().lineage_part != b2.first().lineage_part, "fixture drifted"
-    wh.merge(spark, "triples", b1, keys=["subj", "pred", "obj"],
-             partition_by=["lineage_part"], source_unique=True,
-             part_determined_by_keys=True)
-    s1 = wh.latest_snapshot("triples")
-    wh.merge(spark, "triples", b2, keys=["subj", "pred", "obj"],
-             partition_by=["lineage_part"], source_unique=True,
-             part_determined_by_keys=True)
-    s2 = wh.latest_snapshot("triples")
-    p1 = b1.first().lineage_part
-    d1 = os.path.join(wh._tdir("triples"), s1, f"lineage_part={p1}")
-    d2 = os.path.join(wh._tdir("triples"), s2, f"lineage_part={p1}")
-    inodes1 = {os.stat(os.path.join(d1, f)).st_ino for f in os.listdir(d1)
-               if f.endswith(".parquet")}
-    inodes2 = {os.stat(os.path.join(d2, f)).st_ino for f in os.listdir(d2)
-               if f.endswith(".parquet")}
-    assert inodes1 == inodes2 and inodes1, "untouched partition was rewritten"
-    got = {(r.subj, r.obj) for r in wh.read(spark, "triples").collect()}
-    assert got == {("E_a", "E_b"), ("E_c", "E_d")}

@@ -70,51 +70,6 @@ def test_latest_pointer_survives_partial_table_state(spark, tmp_path):
     assert len(_rows(wh.read(spark, "t"))) == 4
 
 
-def test_partition_scoped_merge_links_untouched_partitions(spark, tmp_path):
-    """A merge touching one lineage_part must hard-link (not rewrite) every
-    other partition's files into the new snapshot, and still produce the
-    correct merged content."""
-    import glob
-    import os
-
-    wh = Warehouse(str(tmp_path))
-    base = spark.createDataFrame(
-        [(1, "a", 0), (2, "b", 0), (3, "c", 1), (4, "d", 2)],
-        "k int, v string, lineage_part int",
-    )
-    wh.merge(spark, "t", base, keys=["k"], partition_by=["lineage_part"],
-             part_determined_by_keys=True)
-    snap1 = wh.latest_snapshot("t")
-    batch = spark.createDataFrame(
-        [(2, "B", 0), (5, "e", 0)], "k int, v string, lineage_part int"
-    )
-    wh.merge(spark, "t", batch, keys=["k"], partition_by=["lineage_part"],
-             part_determined_by_keys=True)
-    snap2 = wh.latest_snapshot("t")
-    assert snap2 != snap1
-
-    got = {r["k"]: r["v"] for r in wh.read(spark, "t").collect()}
-    assert got == {1: "a", 2: "b", 3: "c", 4: "d", 5: "e"}
-    assert wh.rows("t") == 5
-
-    # untouched partitions (1, 2) are hard links of the prior snapshot files
-    for part in ("lineage_part=1", "lineage_part=2"):
-        old_files = sorted(glob.glob(str(tmp_path / "t" / snap1 / part / "*.parquet")))
-        new_files = sorted(glob.glob(str(tmp_path / "t" / snap2 / part / "*.parquet")))
-        assert old_files and len(old_files) == len(new_files)
-        for o, n in zip(old_files, new_files):
-            assert os.stat(o).st_ino == os.stat(n).st_ino  # same inode
-    # touched partition 0 was rewritten (distinct inodes)
-    old0 = {os.stat(f).st_ino
-            for f in glob.glob(str(tmp_path / "t" / snap1 / "lineage_part=0" / "*.parquet"))}
-    new0 = {os.stat(f).st_ino
-            for f in glob.glob(str(tmp_path / "t" / snap2 / "lineage_part=0" / "*.parquet"))}
-    assert not (old0 & new0)
-    # merge scope is recorded in the manifest for lineage/debugging
-    m = [x for x in wh.snapshots("t") if x["snapshot_id"] == snap2][0]
-    assert m["merge_scope"] == ["0"]
-
-
 def test_partition_scoped_merge_idempotent(spark, tmp_path):
     wh = Warehouse(str(tmp_path))
     df = spark.createDataFrame(
@@ -147,26 +102,6 @@ def test_merge_scoped_path_refused_without_key_dependency(spark, tmp_path):
     wh.merge(spark, "t", batch, keys=["k"], partition_by=["prov_part"])
     got = _rows(wh.read(spark, "t").select("k", "v"))
     assert got == [(1, "a"), (2, "b")]  # no duplicate key, first write wins
-
-
-def test_merge_scoped_engages_when_part_in_keys(spark, tmp_path):
-    """part_col in keys needs no declaration: the dependency is trivial."""
-    import glob
-    import os
-
-    wh = Warehouse(str(tmp_path))
-    base = spark.createDataFrame(
-        [(1, "a", 0), (2, "b", 1)], "k int, v string, part int"
-    )
-    wh.merge(spark, "t", base, keys=["k", "part"], partition_by=["part"])
-    snap1 = wh.latest_snapshot("t")
-    batch = spark.createDataFrame([(3, "c", 0)], "k int, v string, part int")
-    wh.merge(spark, "t", batch, keys=["k", "part"], partition_by=["part"])
-    snap2 = wh.latest_snapshot("t")
-    old = glob.glob(str(tmp_path / "t" / snap1 / "part=1" / "*.parquet"))
-    new = glob.glob(str(tmp_path / "t" / snap2 / "part=1" / "*.parquet"))
-    assert old and {os.stat(f).st_ino for f in old} == {os.stat(f).st_ino for f in new}
-    assert len(_rows(wh.read(spark, "t"))) == 3
 
 
 def test_merge_scoped_falls_back_on_escapable_partition_values(spark, tmp_path):
@@ -252,6 +187,11 @@ def test_compact_unpartitioned_collapses_files(spark, tmp_path):
     assert _rows(wh.read(spark, "t")) == [(i,) for i in range(100)]
     m = wh.snapshot_meta("t")
     assert m["rows"] == 100 and m["compacted_from"] == snap1
+    # the compacted manifest keeps the schema, so a read infers nothing
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    wh.read(spark, "t")
+    assert set(tracker.getJobIdsForGroup(None)) - before == set()
 
     # already compact: no new snapshot is committed
     assert wh.compact(spark, "t") == snap2
