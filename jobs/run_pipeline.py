@@ -1,9 +1,16 @@
 #!/usr/bin/env python
 """spark-submit entrypoint for the KG-construction pipeline.
 
-    spark-submit --py-files kgforge.zip jobs/run_pipeline.py \
+    python tools/make_pyfiles.py     # dist/kgforge.zip, dist/kgforge-matcher.jar
+    spark-submit --py-files dist/kgforge.zip --jars dist/kgforge-matcher.jar \
+        jobs/run_pipeline.py \
         --transcripts <path> --dictionary <path> --xrefs <path> \
         --warehouse <dir> --run-id run-1 [--partitions 256]
+
+``--jars`` puts the JVM mention matcher on every executor's classpath. It
+may be left out when the driver has a JDK: the matcher is then compiled
+from its source on first use and added to the session (kgforge.jvm); with
+neither, extraction falls back to the Python matcher.
 
 Runs extract → link → canonicalize → materialize with per-partition
 checkpoints; re-running with the same --run-id resumes from the checkpoint

@@ -20,6 +20,7 @@ their round cap rather than return a map that may still be wrong.
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -144,12 +145,16 @@ def canonical_map_auto(entities: DataFrame, edges: DataFrame) -> DataFrame:
         r = find(node)
         if r not in comp_min or node < comp_min[r]:
             comp_min[r] = node
-    rows = [(node, comp_min[find(node)]) for node in parent]
-    spark = entities.sparkSession
     ent = entities.select("entity_id").distinct()
-    if not rows:
+    if not parent:
         return ent.select("entity_id", F.col("entity_id").alias("canonical_id"))
-    cc = spark.createDataFrame(rows, "node string, component string")
+    # from pandas, so Arrow carries it into the JVM: a list of tuples is
+    # pickled through a PythonRDD that starts Python workers to read it
+    cc = entities.sparkSession.createDataFrame(
+        pd.DataFrame({"node": list(parent),
+                      "component": [comp_min[find(node)] for node in parent]}),
+        "node string, component string",
+    )
     return ent.join(F.broadcast(cc), ent.entity_id == cc.node, "left").select(
         "entity_id", F.coalesce("component", "entity_id").alias("canonical_id")
     )

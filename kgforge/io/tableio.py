@@ -381,8 +381,9 @@ class Warehouse:
             snap = self._next_snapshot_id(table)
             data_dir = os.path.join(tdir, snap)
             # coalesce, not repartition: compaction of an unpartitioned
-            # table is a pure narrow read-small/write-big pass, zero shuffle
-            spark.read.parquet(old_dir).coalesce(n_out).write.mode(
+            # table is a pure narrow read-small/write-big pass, zero shuffle;
+            # read with the manifest's schema, so the write is the one job
+            self.read(spark, table, old_snap).coalesce(n_out).write.mode(
                 "overwrite"
             ).parquet(data_dir)
         else:

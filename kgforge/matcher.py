@@ -1,4 +1,4 @@
-"""Leftmost-longest dictionary matcher used inside Arrow-batched UDFs.
+"""Leftmost-longest dictionary matcher: the semantics of mention extraction.
 
 Semantics (shared contract with tests/oracle_ref.py, which reimplements them
 independently): tokenize text on ``\\w+`` (word boundaries are therefore
@@ -7,16 +7,17 @@ longest dictionary surface (in tokens) starting there; on a match, emit and
 jump past it (non-overlapping). This mirrors the reference bot's dictionary
 field-matching (SURVEY.md §2.A A2/A5) re-expressed for free text.
 
-The matcher is built ONCE per executor task (from a Spark broadcast of the
-surface list) and reused across Arrow batches — the per-batch cost is pure
-matching, no automaton rebuild.
+Extraction runs these semantics in the JVM (kgforge/jvm/LexiconMatch.java,
+tested for equality against this class and the oracle). This class is the
+Python reference, the ``mapInPandas`` fallback of kgforge.extract, and the
+tokenizer of dictionary surfaces for both: ``surface_words`` builds the
+lexicon file the JVM matcher reads.
 
-Measured dead end (round 3): batching the whole Arrow batch into one
-\\x00-joined mega-string (ONE C-level finditer pass, numpy searchsorted to
-map offsets back per doc) benched 0.67x the per-row loop at realistic turn
-lengths — the join/mapping overhead exceeds the per-row finditer setup it
-saves. The per-row scan below is the measured optimum for CPython; the next
-step up is a JVM-side matcher, not a Python rearrangement.
+Measured dead ends for the Python side: batching a whole Arrow
+batch into one \\x00-joined mega-string (ONE C-level finditer pass, numpy
+searchsorted to map offsets back per doc) benched 0.67x the per-row loop,
+and ``mapInArrow`` instead of ``mapInPandas`` gained nothing (8.11 against
+8.10 s): the cost is the per-token Python loop. The JVM matcher is 7x faster.
 """
 
 from __future__ import annotations
@@ -25,6 +26,16 @@ import re
 from collections.abc import Iterable
 
 _TOKEN_RE = re.compile(r"\w+")
+
+
+def surface_words(surfaces: Iterable[str]) -> set[tuple[str, ...]]:
+    """Each surface as its lowercased ``\\w+`` tokens; surfaces without a
+    token are dropped."""
+    return {
+        words
+        for s in surfaces
+        if (words := tuple(w.lower() for w in _TOKEN_RE.findall(s)))
+    }
 
 
 class LexiconMatcher:
@@ -41,12 +52,19 @@ class LexiconMatcher:
     __slots__ = ("single", "multi_first")
 
     def __init__(self, surfaces: Iterable[str]):
+        self._index(surface_words(surfaces))
+
+    @classmethod
+    def from_words(cls, words: Iterable[tuple[str, ...]]) -> LexiconMatcher:
+        """A matcher over already-tokenized surfaces (``surface_words``)."""
+        m = cls.__new__(cls)
+        m._index(words)
+        return m
+
+    def _index(self, lexicon: Iterable[tuple[str, ...]]) -> None:
         single: set[str] = set()
         multi_first: dict[str, list[tuple[str, ...]]] = {}
-        for s in surfaces:
-            words = tuple(w.lower() for w in _TOKEN_RE.findall(s))
-            if not words:
-                continue
+        for words in lexicon:
             if len(words) == 1:
                 single.add(words[0])
             else:

@@ -16,6 +16,7 @@ from __future__ import annotations
 import os
 import time
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -47,8 +48,6 @@ def record_stage_cached(
     DataFrame, landed driver-side with a pyarrow merge (no Spark write job).
     Use when the stage output is persisted in memory; use
     record_stage_from_files when it has just been written to disk."""
-    import pandas as pd
-
     counts = (
         df_cached.groupBy("lineage_part")
         .agg(F.count(F.lit(1)).alias("rows_out"))
@@ -76,7 +75,6 @@ def record_stage_from_files(
     re-scan it; at 10^12 turns the metadata already knows the answer."""
     import glob
 
-    import pandas as pd
     import pyarrow.parquet as pq
 
     snap = wh.latest_snapshot(table)
@@ -119,7 +117,9 @@ def done_parts(wh: Warehouse, spark: SparkSession, stage: str, run_id: str) -> D
     ].unique()
     if len(parts) == 0:
         return None
-    return spark.createDataFrame([(int(p),) for p in parts], "lineage_part int")
+    # from pandas (Arrow), not a list: a list is pickled through a PythonRDD
+    return spark.createDataFrame(pd.DataFrame({"lineage_part": parts.astype("int32")}),
+                                 "lineage_part int")
 
 
 def filter_resume(df_with_lineage: DataFrame, done: DataFrame | None) -> DataFrame:

@@ -128,8 +128,9 @@ def pipe_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
     sql=_PRELUDE + ",\n" + _MENTIONS_CTE
     + '\nSELECT conv_id, turn_idx, m_idx, surface, begin, "end" FROM mentions',
     doc=(
-        "Arrow-batched leftmost-longest mention detection (mapInPandas matcher "
-        "built once per task from a broadcast lexicon) — char offsets included."
+        "Leftmost-longest mention detection in the JVM (a Java UDF over a "
+        "lexicon shipped with addFile, posexplode for m_idx) — code-point "
+        "offsets included."
     ),
 )
 def udf_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -4,7 +4,7 @@ materialize (BASELINE.json north_star), resumable and idempotent.
 Stage boundaries and their shuffle/process crossings (SURVEY.md §3.2):
 
   read + salted repartition   1 shuffle (repartition by conv_id+salt)
-  extract (mapInPandas)       Arrow JVM↔Python boundary, no shuffle
+  extract (JVM UDF)           posexplode of a Java UDF, no shuffle, no Python
   link (broadcast + SMJ)      broadcast + 1 shuffle for the tail join
   triples (windows)           1 shuffle (partitionBy conv_id[,turn_idx])
   canonicalize (CC loop)      2 shuffles × O(log d) iterations
@@ -52,10 +52,10 @@ def extract_link(
     """transcripts → (mentions, linked): salted repartition, the matcher,
     then linking. ``mentions`` comes back persisted — the broadcast head and
     the sort-merge tail of link_mentions both read it, and without the cut
-    the Python matcher runs once per join side — so the caller unpersists it
-    once ``linked`` has been materialized."""
+    the matcher runs once per join side — so the caller unpersists it once
+    ``linked`` has been materialized."""
     # project to the extraction columns BEFORE the shuffle — role/tool/ts
-    # would otherwise ride the repartition + Arrow transfer for nothing
+    # would otherwise ride the repartition for nothing
     salted = skew.salted_repartition(
         transcripts.select("conv_id", "turn_idx", "text"),
         num_partitions,

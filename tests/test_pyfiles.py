@@ -44,3 +44,15 @@ def test_zip_is_deterministic(tmp_path):
     a = open(_build(tmp_path / "1"), "rb").read()
     b = open(_build(tmp_path / "2"), "rb").read()
     assert a == b
+
+
+def test_matcher_jar_is_deterministic_and_holds_the_class(tmp_path):
+    """The jar tools/make_pyfiles.py writes next to the zip."""
+    import zipfile
+
+    from kgforge import jvm
+
+    a = jvm.build_jar(str(tmp_path / "1" / "kgforge-matcher.jar"))
+    b = jvm.build_jar(str(tmp_path / "2" / "kgforge-matcher.jar"))
+    assert open(a, "rb").read() == open(b, "rb").read()
+    assert "kgforge/jvm/LexiconMatch.class" in zipfile.ZipFile(a).namelist()

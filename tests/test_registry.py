@@ -129,3 +129,8 @@ def test_fingerprint_walk_reaches_the_shared_stages():
         assert "kgforge.canon.connected_components_star" in reached, key
     reached, _ = certify._walk(ops["filter_gate"].fn)
     assert "kgforge.ops.text._lang_score_spark" in reached
+    # the JVM matcher's Java source is hashed through its sha256 constant
+    from kgforge import jvm
+
+    _, parts = certify._walk(ops["udf_mentions"].fn)
+    assert f"const::MATCHER_SHA256::{jvm.MATCHER_SHA256!r}" in parts

@@ -180,7 +180,11 @@ def test_compact_unpartitioned_collapses_files(spark, tmp_path):
     before = glob.glob(str(tmp_path / "t" / snap1 / "*.parquet"))
     assert len(before) == 8
 
+    # the rewrite reads with the manifest's schema: the write is the only job
+    tracker = spark.sparkContext.statusTracker()
+    jobs_before = set(tracker.getJobIdsForGroup(None))
     snap2 = wh.compact(spark, "t")
+    assert len(set(tracker.getJobIdsForGroup(None)) - jobs_before) == 1
     assert snap2 != snap1
     after = glob.glob(str(tmp_path / "t" / snap2 / "*.parquet"))
     assert len(after) == 1
@@ -188,7 +192,6 @@ def test_compact_unpartitioned_collapses_files(spark, tmp_path):
     m = wh.snapshot_meta("t")
     assert m["rows"] == 100 and m["compacted_from"] == snap1
     # the compacted manifest keeps the schema, so a read infers nothing
-    tracker = spark.sparkContext.statusTracker()
     before = set(tracker.getJobIdsForGroup(None))
     wh.read(spark, "t")
     assert set(tracker.getJobIdsForGroup(None)) - before == set()

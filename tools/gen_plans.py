@@ -8,15 +8,15 @@ from kgforge.registry import all_ops
 
 NOTES = {
     "pipe_triples": (
-        "Flagship. One MapInPandas (extraction runs ONCE — persist at the "
-        "linked cut), broadcast dictionary joins; dedup is a min() aggregate "
+        "Flagship. One matcher Generate (extraction runs ONCE — persist at "
+        "the linked cut), broadcast dictionary joins; dedup is a min() aggregate "
         "over the string-encoded provenance — SortAggregate (var-length min "
         "buffers, string or struct, aren't hash-aggregable) but with the "
         "partial/final pair around one Exchange, so duplicates collapse "
         "map-side and no skewed window partition exists (plan-asserted in "
         "tests/test_plans.py)."
     ),
-    "udf_mentions": "Extraction alone: scan → mapInPandas, no pre-UDF shuffle beyond the salted repartition.",
+    "udf_mentions": "Extraction alone: scan → Generate posexplode(JVM matcher UDF), no pre-UDF shuffle beyond the salted repartition.",
     "join_salted": "Salted skew join: one Exchange on the salted key; dimension broadcast after salt-explode.",
     "join_bucketed": "Co-located bucketed join: SortMergeJoin with ZERO Exchange nodes.",
     "agg_group": "TPC-H Q1 shape: HashAggregate partial → Exchange → HashAggregate final.",
