@@ -178,7 +178,7 @@ def extract_mentions(transcripts: DataFrame, dictionary: DataFrame) -> DataFrame
     narrow = transcripts.select("conv_id", "turn_idx", "text").sortWithinPartitions(
         "conv_id", "turn_idx"
     )
-    # the session of the frame, not the builder's: kg_ingest's foreachBatch
+    # the session of the frame, not get_spark's: kg_ingest's foreachBatch
     # batches run on a cloned session
     if jvm.register(transcripts.sparkSession):
         return _mentions_in_jvm(narrow, lexicon)

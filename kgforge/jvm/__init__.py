@@ -96,7 +96,7 @@ def build_jar(out_path: str) -> str:
                 info.compress_type = zipfile.ZIP_DEFLATED
                 info.external_attr = 0o644 << 16
                 zf.writestr(info, data)
-        os.replace(tmp, out_path)  # atomic: a concurrent builder sees old or new
+        os.replace(tmp, out_path)  # atomic: a concurrent build sees old or new
         return out_path
     finally:
         shutil.rmtree(work, ignore_errors=True)

@@ -98,7 +98,7 @@ def test_lexicon_cache_is_size_one_lru(spark):
 
 
 # --- the JVM matcher (kgforge/jvm/LexiconMatch.java) against the oracle and
-# the mapInPandas fallback. Both run through extract's own plan builders;
+# the mapInPandas fallback. Both run through extract's own plan functions;
 # every case set is one Spark job per path.
 
 import random
